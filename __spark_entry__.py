@@ -1,10 +1,10 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Driver contract: ``entry``, ``queries`` and ``oracle_sql``.
 
 Thin re-export of the engine's query registry
 (``childhoodcancerdatainitiative_prefect_pipeline_spark.queries``).
-Each registry entry pairs a Spark callable with a DuckDB oracle; the
-driver compares them at sf=0.01 (row count + schema + order-
-insensitive value hash).
+Each registry entry pairs a Spark callable with a DuckDB oracle;
+``scripts/verify_driver.py`` and ``tests/test_oracle_parity.py``
+compare them (row count + schema + order-insensitive value hash).
 """
 
 from __future__ import annotations
@@ -21,616 +21,12 @@ def entry(spark: SparkSession) -> DataFrame:
     return REGISTRY["catalog_stats"].fn(spark, "/root/testdata/sf0.001")
 
 
-# The round driver compares the FIRST 50 registry entries against their
-# DuckDB oracles (CORRECTNESS_r01/r02 both cut off at exactly 50 with
-# far more registered), so ordering decides which queries get an
-# official certification each round.  Rotate never-yet-certified
-# queries to the front; everything here is also locally verified across
-# the whole registry by scripts/verify_driver.py before each commit.
-_CERTIFY_FIRST = [
-    # round-11 OPTIMIZATION-phase reworks (cds driver-constant rework
-    # via selectExpr/schema threading, pagerank degrees-on-nodes +
-    # dangling fold, CC probe fold, kNN dot_flat/flatten selectExpr,
-    # dashboard job-group cancellation; locally 296/296 green then
-    # re-stamped — fronted so the r11 driver window re-proves them
-    # hash-green on record)
-    "cds_flatten",
-    "ccdi_release_dashboard",
-    "graph_pagerank_topk",
-    "entity_golden_record",
-    "dedup_cluster_components",
-    "dedup_minhash_clusters_md5",
-    "graph_triangle_count_knn",
-    "graph_kcore_membership_knn",
-    "similarity_graph_routed_low",
-    # round-10 OPTIMIZATION-phase reworks (scaled-long exact sums, PQ
-    # encode rework, threaded dashboard, thresholded levenshtein, cds
-    # cleanups; locally 296/296 green then re-stamped — fronted so the
-    # r10 driver window re-proves them hash-green on record)
-    "q1_pricing_summary",
-    "q3_revenue_by_order",
-    "q5_region_revenue",
-    "q6_forecast_revenue",
-    "catalog_stats",
-    "events_daily_rollup",
-    "sim_pq_topk_det",
-    "ccdi_release_dashboard",
-    "cds_flatten",
-    "linkage_blocked_fuzzy",
-    "entity_golden_record",
-    "customer_rfm_segments",
-    "q7_nation_volume",
-    "q8_market_share",
-    "q9_profit_by_nation",
-    "q10_returned_items",
-    "q11_important_parts",
-    "q14_promo_share",
-    "q15_top_supplier",
-    "q17_small_quantity_revenue",
-    "q18_large_volume_customers",
-    "q19_disjunctive_filter",
-    "q20_part_share_suppliers",
-    "q22_dormant_customers",
-    "stream_tumbling_rollup",
-    "stream_session_windows",
-    "stream_sliding_rollup",
-    "events_range_join",
-    "orders_rollup_stats",
-    "orders_abc_pareto",
-    "lineitem_scd2_enrich",
-    "orders_dow_seasonality",
-    "orders_cube_stats",
-    "corpus_curation_pipeline",
-    # round-10 build-phase reworked entries (identical-content collapse
-    # + setsim kernel verify; locally 296/296 green then re-stamped)
-    "dedup_setsim_prefix_join",
-    "dedup_video_clip_pairs",
-    "dedup_containment_pairs",
-    "dedup_simhash_pairs",
-    # round-9 reworked entries (re-certified hash-green in r09).  As of
-    # r10 the fingerprint hashes the fn's TRANSITIVE in-package deps
-    # (_dep_nodes below), so operator-module drift voids certification
-    # automatically — no more hand-assembled rework lists; prepends
-    # here only tune ordering among already-voided entries.
-    "events_sessionize",
-    "dedup_minhash_clusters_md5",
-    "dedup_cluster_components",
-    "dedup_cluster_star",
-    "entity_golden_record",
-    "graph_pagerank_topk",
-    "graph_kcore_membership",
-    # round-6 additions (front-loaded per VERDICT r5: certify the new
-    # de-weakened scale paths in the same round they land)
-    "graph_triangle_count_lsh",
-    # oracle changed in r6 (frame_stride=2 sampling) — certify fresh
-    "dedup_video_clip_pairs",
-    # upgraded rows-only -> oracle in r6 (VERDICT item 7): bounded
-    # peel unroll, training-loop CTE replay, sketch property booleans
-    "graph_kcore_membership",
-    "graph_kcore_membership_lsh",
-    "graph_triangle_count_knn",
-    "graph_kcore_membership_knn",
-    "corpus_bpe_vocab",
-    "profile_columns_approx",
-    # round-3 additions (never checked by driver or judge)
-    "igm_sample_mapper",
-    "corpus_decontaminate",
-    "dedup_exact_normalized",
-    "events_path_transitions",
-    "orders_abc_pareto",
-    "text_collocation_pmi",
-    "submission_cruncher_merge",
-    "template_update_migrate",
-    "orders_market_basket",
-    "events_anomaly_zscore",
-    "text_unigram_logprob",
-    "corpus_token_budget_mix",
-    "orders_percentile_rank",
-    "events_sliding_rate",
-    "embedding_label_outliers",
-    "events_scd2_intervals",
-    "bipartite_degree_hist",
-    "text_repetition_stats",
-    "corpus_gopher_filter",
-    "text_tfidf_topk",
-    "text_bm25_search",
-    "inverted_index_build",
-    "corpus_domain_mix",
-    "profile_quantiles",
-    "events_retention_cohorts",
-    "events_daily_topk",
-    "url_dedup_canonical",
-    # round-2 additions (never checked by driver or judge)
-    "cds_flatten",
-    "ccdi_to_dbgap",
-    "ccdi_to_sra",
-    "ccdi_to_dcf_index",
-    "cog_transform_battery",
-    "liftover_generic_node",
-    "cascade_remove",
-    "guid_fill_reconcile",
-    "model_mapping_diff",
-    "json_roundtrip_shred",
-    "gdc_mapping_battery",
-    "gdc_experiment_reconcile",
-    "gdc_nested_entity_roundtrip",
-    "necrosis_tumor_fill",
-    "dedup_cluster_components",
-    "corpus_curation_pipeline",
-    "text_pii_redact",
-    "events_asof_join",
-    "events_range_join",
-    "events_funnel",
-    "orders_rollup_stats",
-    "events_sessionize",
-    # regressed in r02 (HUGEINT oracle formatting, fixed) — re-certify
-    "w1_eav_pivot",
-    # round-4 pack 1 (added after the r03 cutoff; round-4 rotation)
-    "semdedup_prune",
-    "corpus_bloom_decontaminate",
-    "text_quality_classifier",
-    "text_bigram_logprob",
-    "corpus_temperature_mix",
-    "graph_triangle_count",
-    "events_cms_heavy_hitters",
-    "profile_hll_distinct",
-    "events_concurrency_peak",
-    "lineitem_weighted_median",
-    "orders_cube_stats",
-    "dedup_setsim_prefix_join",
-    "lineitem_median_twopass",
-    "corpus_shard_balance",
-    "profile_hll_by_source",
-    "join_size_estimate_cms",
-    "dedup_containment_pairs",
-    "events_sliding_hll_uniques",
-    "text_token_entropy",
-    "events_time_weighted_avg",
-    "search_hybrid_rrf",
-    "dedup_minhash_pairs_md5",
-    "dedup_simhash_pairs_md5",
-    "sim_ivf_topk_det",
-    "events_decayed_score",
-    "events_trend_ols",
-    "lineitem_corr_grouped",
-    "profile_expectations",
-    "events_gap_stats",
-    "events_trend_outliers",
-    "lineitem_scd2_enrich",
-    "customer_rfm_segments",
-    # upgraded from rows-only to oracle in round 4 (md5 thresholds)
-    "corpus_stratified_sample",
-    "dedup_minhash_clusters_md5",
-    "text_ngram_novelty",
-    "embedding_quantize_int8",
-    # upgraded rows-only -> oracle in round 4 (literal plane matrix)
-    "dedup_embedding_lsh",
-    "corpus_source_scorecard",
-    "text_zipf_fit",
-    "orders_dow_seasonality",
-    "text_langid_confusion",
-    # round-3 TPC-H shapes (low-risk oracles; round-4 rotation)
-    "q4_priority_exists",
-    "q7_nation_volume",
-    "q10_returned_items",
-    "q14_promo_share",
-    "q19_disjunctive_filter",
-    "dedup_incremental_batch",
-    # round-3 pack 8/9 (added after the r03 cutoff; round-4 rotation)
-    "q2_min_cost_supplier",
-    "q8_market_share",
-    "q9_profit_by_nation",
-    "q11_important_parts",
-    "q12_late_shipment_priority",
-    "q13_order_count_distribution",
-    "q15_top_supplier",
-    "q16_supplier_part_types",
-    "q17_small_quantity_revenue",
-    "q18_large_volume_customers",
-    "q20_part_share_suppliers",
-    "q21_waiting_suppliers",
-    "q22_dormant_customers",
-    "dedup_cluster_star",
-    "corpus_group_sample_k",
-    "corpus_chunk_sliding",
-    "kf_transfer_groups",
-    "orders_abc_pareto_scaled",
-    "dedup_substring_spans",
-    # round-3 session additions (locally hash-verified; next rotation)
-    "ccdi_to_tabbreaker",
-    "indexd_guid_validation",
-    "indexd_ghost_records",
-    "text_bpe_tokens",
-    "text_html_strip",
-    "privacy_k_anonymity",
-    "linkage_blocked_fuzzy",
-    "cdc_merge_snapshot",
-    "sim_pq_topk_det",
-    "text_trigram_backoff",
-    "events_attribution",
-    "corpus_kl_drift",
-    "corpus_batch_schedule",
-    "entity_golden_record",
-    "dedup_minhash_eval",
-    "text_bpe_fertility",
-    "cdc_incremental_agg",
-    "corpus_decontaminate_cut",
-    "corpus_split_leakage_safe",
-    "profile_psi_drift",
-    "embedding_doc_pool",
-    "sim_hard_negatives",
-    "repair_fd_violations",
-    "lineitem_trimmed_mean",
-    "features_target_encode_loo",
-    "eval_auc_by_source",
-    "eval_calibration_bins",
-    "stats_bootstrap_ci",
-    "multimodal_bmp_decode",
-    "multimodal_png_decode",
-    "bam_stats_extract",
-    "lineitem_mad_outliers",
-    "sql_interface_top_orders",
-    "diagnostics_skew_keys",
-    "text_blocklist_screen",
-    "corpus_truncation_loss",
-    "corpus_training_manifest",
-    "eval_retrieval_mrr",
-    "events_ltv_cohorts",
-    "text_readability_flesch",
-    "orders_wow_growth",
-    "dedup_cross_source_matrix",
-    "features_woe_iv",
-    "ccdi_release_dashboard",
-    "events_kaplan_meier",
-    "events_logrank_test",
-    "events_rmst",
-    "lineitem_benford_test",
-    "events_dau_wau_stickiness",
-    "orders_repeat_rate_cohort",
-    "events_error_budget_burn",
-    "events_props_json_stats",
-    "star_referential_audit",
-    "orders_priority_sla",
-    "supplier_concentration_hhi",
-    "customer_revenue_gini",
-    "dedup_jaccard_histogram",
-    "corpus_vocab_overlap_matrix",
-    "corpus_vocab_coverage_curve",
-    "events_hour_profile",
-    "lineitem_returns_trend",
-    # simple aggregate shapes deferred to the round-4 rotation
-    # (locally verified every commit by scripts/verify_driver.py)
-    "cpi_associated_ids",
-    "surrogate_key_translate",
-    "db_count_diff",
-    "text_vocab_topk",
-    "db_stats_wide",
-    "cog_tranche_sparsity",
-    "profile_columns",
-    # rows-only entries (weaker driver check by design; certified
-    # as slots free up in later rotations).  kcore/bpe_vocab/
-    # columns_approx moved to the r6 front block (oracle-backed now).
-    "corpus_pack_sequences",
-    "corpus_weighted_sample",
-    "dedup_minhash_clusters",
-    "stream_sliding_rollup",
-    "graph_pagerank_topk",
-    # judge-verified in r01 but never driver-certified
-    "o2_custom_order",
-    "o4_incell_sort",
-    "f6_enum_normalize",
-    "u2_union_previous_keep_last",
-    "wb_first_match_fallback",
-    "j9_fuzzy_relink",
-    "j10_synonym_attach",
-    "j11_mapping_eval",
-    "l3_unlifted_report",
-    "f7_pii_scan",
-    "f12_ext_type_infer",
-    "f13_numeric_checks",
-    "f16_code_encoding",
-    "a8_binned_histogram",
-    "o1_order_by_count",
-    "rule_proband_family",
-    "eav_roundtrip",
-]
-
-
-_PKG = "childhoodcancerdatainitiative_prefect_pipeline_spark"
-
-
-def _stable_repr(v, depth: int = 0) -> str:
-    """Deterministic repr for module-level data globals.
-
-    ``repr`` alone is unstable across processes for sets (hash-seeded
-    iteration order) and for objects with the default ``<... at 0x..>``
-    repr (memory addresses) — either would void certifications at
-    random.  Containers recurse with sorted set/dict ordering; opaque
-    objects degrade to their type name only.
-    """
-    if depth > 6:
-        return "<deep>"
-    if v is None or isinstance(v, (bool, int, float, str, bytes)):
-        return repr(v)
-    if isinstance(v, dict):
-        items = sorted(v.items(), key=lambda kv: repr(kv[0]))
-        return "{%s}" % ",".join(
-            _stable_repr(k, depth + 1) + ":" + _stable_repr(x, depth + 1)
-            for k, x in items
-        )
-    if isinstance(v, (list, tuple)):
-        return "[%s]" % ",".join(_stable_repr(x, depth + 1) for x in v)
-    if isinstance(v, (set, frozenset)):
-        return "{%s}" % ",".join(
-            sorted(_stable_repr(x, depth + 1) for x in v)
-        )
-    pat = getattr(v, "pattern", None)  # compiled regex
-    if isinstance(pat, (str, bytes)):
-        return "re:%r" % (pat,)
-    return "<%s.%s>" % (type(v).__module__, type(v).__qualname__)
-
-
-_DEP_SRC_CACHE: dict = {}
-_DEP_IMPORT_CACHE: dict = {}
-
-
-def _dep_nodes(fn) -> set:
-    """Transitive in-package dependency nodes reachable from ``fn``.
-
-    Walks the fn's code object(s): every global it names resolves to a
-    module / function / class / constant; in-package callables recurse
-    into THEIR globals, referenced in-package modules contribute their
-    full source hash.  The result is a set of (kind, name..., sha16)
-    tuples — hashing the sorted set (rather than a recursive digest)
-    sidesteps import cycles.  This is what lets a rework of
-    ``operators/graph.py`` void the certification of every registry
-    entry whose execution path crosses it, with no manual
-    ``_CERTIFY_FIRST`` bookkeeping (VERDICT r9 item 1 / ADVICE r9).
-    """
-    import ast
-    import hashlib
-    import importlib
-    import importlib.util
-    import inspect
-    import sys
-    import textwrap
-    import types
-
-    def sha(text: str) -> str:
-        return hashlib.sha256(text.encode()).hexdigest()[:16]
-
-    def src_sha(obj) -> str:
-        # memoized across _dep_nodes calls: registry entries share most
-        # of their closures (the cache holds an obj ref so ids can't be
-        # recycled; tests clear it after editing sources on disk)
-        hit = _DEP_SRC_CACHE.get(id(obj))
-        if hit is not None and hit[0] is obj:
-            return hit[1]
-        try:
-            digest = sha(inspect.getsource(obj))
-        except (OSError, TypeError):
-            digest = sha(repr(type(obj)))
-        _DEP_SRC_CACHE[id(obj)] = (obj, digest)
-        return digest
-
-    def in_pkg(modname) -> bool:
-        return isinstance(modname, str) and (
-            modname == _PKG or modname.startswith(_PKG + ".")
-        )
-
-    nodes: set = set()
-    seen: set = set()
-    work: list = [(None, fn)]
-
-    def push_code(code, globs) -> None:
-        for name in code.co_names:
-            if name in globs:
-                work.append((name, globs[name]))
-        for const in code.co_consts:
-            if isinstance(const, types.CodeType):
-                push_code(const, globs)
-
-    def push_local_imports(fn_obj) -> None:
-        """Registry fns import operators INSIDE the body (lazy import
-        convention) — those names never hit ``__globals__``, so resolve
-        Import/ImportFrom statements from the AST and push their
-        in-package targets.  Memoized across _dep_nodes calls (the
-        cache holds refs so ids can't be recycled)."""
-        hit = _DEP_IMPORT_CACHE.get(id(fn_obj))
-        if hit is not None and hit[0] is fn_obj:
-            work.extend((None, t) for t in hit[1])
-            return
-        targets: list = []
-        try:
-            tree = ast.parse(textwrap.dedent(inspect.getsource(fn_obj)))
-        except (OSError, TypeError, SyntaxError):
-            _DEP_IMPORT_CACHE[id(fn_obj)] = (fn_obj, targets)
-            return
-        pkg = getattr(
-            sys.modules.get(fn_obj.__module__), "__package__", None
-        )
-        for node in ast.walk(tree):
-            if isinstance(node, ast.Import):
-                for alias in node.names:
-                    if in_pkg(alias.name):
-                        try:
-                            targets.append(
-                                importlib.import_module(alias.name)
-                            )
-                        except ImportError:
-                            pass
-            elif isinstance(node, ast.ImportFrom):
-                try:
-                    resolved = importlib.util.resolve_name(
-                        "." * node.level + (node.module or ""), pkg
-                    )
-                except (ImportError, ValueError):
-                    continue
-                if not in_pkg(resolved):
-                    continue
-                try:
-                    mod = importlib.import_module(resolved)
-                except ImportError:
-                    continue
-                for alias in node.names:
-                    tgt = getattr(mod, alias.name, None)
-                    if tgt is None:
-                        try:
-                            tgt = importlib.import_module(
-                                resolved + "." + alias.name
-                            )
-                        except ImportError:
-                            continue
-                    targets.append(tgt)
-        _DEP_IMPORT_CACHE[id(fn_obj)] = (fn_obj, targets)
-        work.extend((None, t) for t in targets)
-
-    while work:
-        name, obj = work.pop()
-        # functools.partial / bound method unwrap
-        obj = getattr(obj, "__func__", obj)
-        inner = getattr(obj, "func", None)
-        if inner is not None and callable(inner) and not isinstance(
-            obj, (types.FunctionType, types.ModuleType, type)
-        ):
-            obj = inner
-        oid = id(obj)
-        if oid in seen:
-            continue
-        seen.add(oid)
-        if isinstance(obj, types.ModuleType):
-            if in_pkg(obj.__name__):
-                nodes.add(("m", obj.__name__, src_sha(obj)))
-            continue
-        if isinstance(obj, types.FunctionType):
-            if in_pkg(getattr(obj, "__module__", None)):
-                nodes.add(
-                    ("f", obj.__module__, obj.__qualname__, src_sha(obj))
-                )
-                push_code(obj.__code__, obj.__globals__)
-                push_local_imports(obj)
-            continue
-        if isinstance(obj, type):
-            if in_pkg(getattr(obj, "__module__", None)):
-                nodes.add(
-                    ("c", obj.__module__, obj.__qualname__, src_sha(obj))
-                )
-                for m in vars(obj).values():
-                    f = getattr(m, "__func__", m)
-                    if isinstance(f, types.FunctionType):
-                        work.append((None, f))
-            continue
-        # plain data global (rule tables, SQL strings, thresholds):
-        # value-hashed under its referenced name
-        if name is not None and not callable(obj):
-            nodes.add(("v", name, sha(_stable_repr(obj))))
-    return nodes
-
-
-def _fingerprint(q) -> str:
-    """Certification fingerprint: oracle SQL + fn source + transitive
-    in-package dependency sources.
-
-    When an entry's oracle, its registered function, OR any in-package
-    helper/operator module on its execution path is reworked after it
-    was driver-certified, the recorded fingerprint in
-    ``CERT_FINGERPRINTS.json`` no longer matches and the entry rotates
-    back into the verification window instead of shipping a stale
-    green.  r7–r9 hashed only oracle+fn source and relied on a manual
-    ``_CERTIFY_FIRST`` complement for operator reworks; r10 closes that
-    gap by folding in ``_dep_nodes`` (VERDICT r9 item 1).
-    """
-    import hashlib
-    import inspect
-
-    try:
-        src = inspect.getsource(q.fn)
-    except (OSError, TypeError):  # builtins/partials: fall back to repr
-        src = repr(q.fn)
-    try:
-        deps = "\n".join(
-            "|".join(map(str, t)) for t in sorted(_dep_nodes(q.fn))
-        )
-    except Exception:  # never let dep-walking break certification reads
-        deps = "<depwalk-failed>"
-    body = (q.oracle or "") + "\n---\n" + src + "\n---\n" + deps
-    return hashlib.sha256(body.encode()).hexdigest()[:16]
-
-
-def _already_certified(artifact_dir=None, registry=None) -> set[str]:
-    """Names already green in a past round's CORRECTNESS_r*.json.
-
-    Reading the driver's own artifacts makes the rotation automatic:
-    entries certified in any earlier round sink to the back, so each
-    round's 50-query window lands on never-yet-certified entries
-    without hand-maintaining the list between rounds.
-
-    Three rules decide whether a past green still counts:
-
-    1. hash_match=True → certified.
-    2. hash_match=None (rows-only pass) counts only for entries that
-       are STILL rows-only today — an entry that since grew an oracle
-       must rotate forward again so the stronger check gets a window
-       slot (r7: the three stream_* rollup upgrades).
-    3. A recorded CERT_FINGERPRINTS.json fingerprint that no longer
-       matches the entry's current oracle+source voids the
-       certification (the entry was reworked after its hash pass) and
-       rotates it forward (ADVICE r7 item 3).
-
-    ``artifact_dir``/``registry`` exist for the unit test
-    (tests/test_entry_rotation.py); production callers use defaults.
-    """
-    import json
-    from pathlib import Path
-
-    adir = Path(artifact_dir) if artifact_dir else Path(__file__).parent
-    reg = registry if registry is not None else REGISTRY
-
-    done: set[str] = set()
-    for f in sorted(adir.glob("CORRECTNESS_r*.json")):
-        try:
-            data = json.loads(f.read_text())
-        except (OSError, ValueError):
-            continue
-        if not isinstance(data, dict):
-            continue
-        for k, v in data.items():
-            if not isinstance(v, dict) or v.get("err"):
-                continue
-            if not (v.get("rows_match") and v.get("schema_match")):
-                continue
-            hm = v.get("hash_match")
-            # a recorded False is a real failure → rotate to front; a
-            # None (rows-only pass) only counts for entries that are
-            # still rows-only today.
-            if hm is True or (
-                hm is None and k in reg and reg[k].oracle is None
-            ):
-                done.add(k)
-
-    # Rule 3: void certifications whose recorded fingerprint drifted.
-    try:
-        fps = json.loads((adir / "CERT_FINGERPRINTS.json").read_text())
-    except (OSError, ValueError):
-        fps = {}
-    if fps:
-        done = {
-            k
-            for k in done
-            if k not in fps
-            or k not in reg
-            or fps[k].get("fp") == _fingerprint(reg[k])
-        }
-    return done
-
-
 def _drained(fn: Callable) -> Callable:
     """Wrap a registry fn so pending LSH hot-bucket observations from
     the PREVIOUS query's action are drained before the next plan is
     built (ADVICE r9: the guard was inert in driver runs — the driver
     collects results itself, so there is no post-action hook; draining
     at the next call is the equivalent \"after any action\" point).
-    The wrapped fn (not this wrapper) is what ``_fingerprint`` hashes.
     """
 
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -648,27 +44,9 @@ def _drained(fn: Callable) -> Callable:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2."""
-    # first occurrence wins: re-prioritizing an entry means PREPENDING
-    # it; a stale mention further down must not demote it
-    pos: dict[str, int] = {}
-    for i, n in enumerate(_CERTIFY_FIRST):
-        pos.setdefault(n, i)
-    certified = _already_certified()
-    # Sort tiers (VERDICT r6 item 3): never-certified oracle-backed
-    # entries fill the driver's 50-slot window FIRST; rows-only
-    # (no-oracle) entries — which can only ever earn the weaker check —
-    # are pinned strictly behind them; already-certified entries last.
-    names = sorted(
-        REGISTRY,
-        key=lambda n: (
-            n in certified,
-            REGISTRY[n].oracle is None,
-            pos.get(n, len(_CERTIFY_FIRST)),
-            n,
-        ),
-    )
-    return {name: _drained(REGISTRY[name].fn) for name in names}
+    """One entry per implemented operator from SURVEY.md §2, in
+    registry order."""
+    return {name: _drained(q.fn) for name, q in REGISTRY.items()}
 
 
 def oracle_sql() -> dict[str, str]:

@@ -185,6 +185,16 @@ def _wait_for_quiet(
     return round(time.monotonic() - t0, 1)
 
 
+def _box_load() -> dict:
+    """Box load for an artifact, sampled AFTER its timed run: the
+    1/5/15-minute loadavg plus ``quiet``, read from the 5-minute
+    average because that one spans the run (a 1-minute sample taken
+    before the JVM started stamped r11's headline quiet at a 5-minute
+    loadavg of 11.1).  The run's own threads count towards it."""
+    loadavg = [round(x, 2) for x in os.getloadavg()]
+    return {"loadavg": loadavg, "quiet": loadavg[1] < 4.0}
+
+
 def _sweep() -> None:
     """`bench.py --sweep` (VERDICT r9 item 7): run the standing
     86-query list against the 10× replica, best-of-2, and emit ONE
@@ -197,7 +207,6 @@ def _sweep() -> None:
     )
     spark = build_session(app_name="ccdi-spark-sweep")
     spark.sparkContext.setLogLevel("ERROR")
-    loadavg = [round(x, 2) for x in os.getloadavg()]
 
     from childhoodcancerdatainitiative_prefect_pipeline_spark.scale_replica import (
         ensure_replica,
@@ -231,8 +240,7 @@ def _sweep() -> None:
         "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "queries": timings,
-        "loadavg": loadavg,
-        "quiet": loadavg[0] < 4.0,
+        **_box_load(),
         "quiet_wait_sec": quiet_wait,
         "replica": "built" if built else "reused",
     }
@@ -258,7 +266,6 @@ def main() -> None:
     )
     spark = build_session(app_name="ccdi-spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
-    loadavg = [round(x, 2) for x in os.getloadavg()]
 
     # Warm the JVM + parquet footers once so timings measure the plans,
     # and force one full-column pass over every input table so the OS
@@ -282,14 +289,8 @@ def main() -> None:
         # in-session spread is weather, not plan change.
         "run_spread_sec": spread,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-        "loadavg": loadavg,
-        # r7 VERDICT item 1 ("what's wrong"): a headline measured on a
-        # loaded box is weather, not signal.  quiet=false marks the
-        # artifact as contaminated; readers should prefer the last
-        # quiet run (SCALE.md keeps the history).  r9: bench now
-        # waits (bounded) for loadavg < 2 before starting the JVM;
-        # quiet_wait_sec records how long it had to wait.
-        "quiet": loadavg[0] < 4.0,
+        # r9: bench waits (bounded) for loadavg < 2 before starting the
+        # JVM; quiet_wait_sec records how long it had to wait.
         "quiet_wait_sec": quiet_wait,
     }
 
@@ -366,10 +367,14 @@ def main() -> None:
         except Exception as ex:  # noqa: BLE001 - secondary measurement
             result["scale_points_error"] = f"{type(ex).__name__}: {ex}"
 
+    # r7 VERDICT item 1: a headline measured on a loaded box is
+    # weather, not signal; quiet=false marks the artifact as such.
+    result.update(_box_load())
     if not result["quiet"]:
         print(
-            f"WARNING: loadavg {loadavg[0]} > 4 — timings reflect box "
-            "pressure, rerun on a quiet box for a headline number",
+            f"WARNING: 5-minute loadavg {result['loadavg'][1]} >= 4 — "
+            "timings reflect box pressure, rerun on a quiet box for a "
+            "headline number",
             file=sys.stderr,
         )
     print(json.dumps(result))

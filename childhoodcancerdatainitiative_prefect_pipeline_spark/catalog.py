@@ -126,6 +126,11 @@ def load_testdata(
     return cat
 
 
+# applicationId → {(abspath, dir mtime): lazy table handle}; holds the
+# current session's entries only (see _read_table).
+_TABLE_CACHE: dict[str, dict] = {}
+
+
 def _read_table(
     spark: SparkSession, app_id: str, sf_dir: str, name: str
 ) -> DataFrame:
@@ -139,24 +144,22 @@ def _read_table(
     It is NOT result caching: the value is an unexecuted plan, every
     action still scans the parquet files.  The mtime key drops the
     entry if the table directory is rewritten (e.g. a replica
-    rebuild), and the applicationId key drops it with the session.
-
-    The cache dict lives as an ATTRIBUTE of this function, not a
-    module global: the certification fingerprint value-hashes plain
-    data globals referenced by in-package functions, so a mutable
-    module-level cache would drift every entry's fingerprint as it
-    fills (function attributes are outside the hash; the function's
-    SOURCE — which is hashed — fully determines the cache semantics).
+    rebuild).  Handles are bound to their session, so the cache holds
+    one applicationId's entries at a time and empties itself when a
+    new session reads; stopped sessions' handles are never kept.
     """
     import os
 
+    cache = _TABLE_CACHE.get(app_id)
+    if cache is None:
+        _TABLE_CACHE.clear()
+        cache = _TABLE_CACHE[app_id] = {}
     path = os.path.abspath(f"{sf_dir}/{name}.parquet")
     try:
         mtime = os.path.getmtime(path)
     except OSError:
         mtime = -1.0
-    key = (app_id, path, mtime)
-    cache: dict = _read_table.__dict__.setdefault("_cache", {})
+    key = (path, mtime)
     df = cache.get(key)
     if df is None:
         df = spark.read.parquet(path)

@@ -1,0 +1,45 @@
+"""bench.py helpers that need no Spark session: the bounded quiet-box
+wait before the JVM starts and the load stamp taken after the run."""
+
+from __future__ import annotations
+
+import bench
+
+
+def test_bench_wait_for_quiet(monkeypatch):
+    """bench._wait_for_quiet (VERDICT r8 item 2): waits while loadavg
+    is above the cap, returns once it drops, and proceeds loudly on
+    timeout instead of waiting forever."""
+    loads = iter([5.0, 5.0, 1.0, 1.0])
+    slept: list = []
+    monkeypatch.setattr(bench.os, "getloadavg", lambda: (next(loads), 0, 0))
+    monkeypatch.setattr(bench.time, "sleep", slept.append)
+    clock = iter([0.0, 1.0, 2.0, 3.0, 4.0, 5.0])
+    monkeypatch.setattr(bench.time, "monotonic", lambda: next(clock))
+    waited = bench._wait_for_quiet(cap=2.0, max_wait=300, poll=10)
+    assert slept == [10]  # one wait tick, then the box went quiet
+    assert waited >= 0
+
+    # timeout path: loadavg never drops, the wait gives up at max_wait
+    monkeypatch.setattr(bench.os, "getloadavg", lambda: (9.9, 0, 0))
+    clock2 = iter([0.0, 100.0, 400.0, 500.0])
+    monkeypatch.setattr(bench.time, "monotonic", lambda: next(clock2))
+    slept.clear()
+    waited = bench._wait_for_quiet(cap=2.0, max_wait=300, poll=10)
+    assert slept == [10]  # one tick at t=100, timeout observed at 400
+    assert waited == 500.0
+
+
+def test_box_load_reads_quiet_from_five_minute_average(monkeypatch):
+    """``quiet`` follows the 5-minute loadavg, not the 1-minute one,
+    and the 1/5/15-minute values are stored next to it."""
+    # r11's headline: a calm last minute inside a loaded run
+    monkeypatch.setattr(bench.os, "getloadavg", lambda: (1.2, 11.1, 6.04321))
+    assert bench._box_load() == {"loadavg": [1.2, 11.1, 6.04], "quiet": False}
+
+    # a spike in the last minute of an otherwise calm run
+    monkeypatch.setattr(bench.os, "getloadavg", lambda: (9.0, 3.99, 2.0))
+    assert bench._box_load() == {"loadavg": [9.0, 3.99, 2.0], "quiet": True}
+
+    monkeypatch.setattr(bench.os, "getloadavg", lambda: (0.5, 4.0, 0.5))
+    assert bench._box_load()["quiet"] is False
