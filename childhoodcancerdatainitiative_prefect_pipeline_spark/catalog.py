@@ -12,6 +12,8 @@ pushdown / column pruning / partition pruning apply unchanged at
 
 from __future__ import annotations
 
+import os
+import threading
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -127,8 +129,10 @@ def load_testdata(
 
 
 # applicationId → {(abspath, dir mtime): lazy table handle}; holds the
-# current session's entries only (see _read_table).
+# current session's entries only (see _read_table).  _TABLE_LOCK makes
+# the applicationId switch and each handle's publication atomic.
 _TABLE_CACHE: dict[str, dict] = {}
+_TABLE_LOCK = threading.Lock()
 
 
 def _read_table(
@@ -147,20 +151,22 @@ def _read_table(
     rebuild).  Handles are bound to their session, so the cache holds
     one applicationId's entries at a time and empties itself when a
     new session reads; stopped sessions' handles are never kept.
+    Thread-safe: concurrent first reads may each build a handle (the
+    footer reads run outside the lock), but only the first one
+    published is kept and every caller gets that one.
     """
-    import os
-
-    cache = _TABLE_CACHE.get(app_id)
-    if cache is None:
-        _TABLE_CACHE.clear()
-        cache = _TABLE_CACHE[app_id] = {}
     path = os.path.abspath(f"{sf_dir}/{name}.parquet")
     try:
         mtime = os.path.getmtime(path)
     except OSError:
         mtime = -1.0
     key = (path, mtime)
-    df = cache.get(key)
+    with _TABLE_LOCK:
+        cache = _TABLE_CACHE.get(app_id)
+        if cache is None:
+            _TABLE_CACHE.clear()
+            cache = _TABLE_CACHE[app_id] = {}
+        df = cache.get(key)
     if df is None:
         df = spark.read.parquet(path)
         # TIMESTAMP(NANOS) parquet columns arrive as long nanos under
@@ -171,5 +177,6 @@ def _read_table(
                 df = df.withColumn(
                     "ts", F.timestamp_micros(F.expr("ts div 1000"))
                 )
-        cache[key] = df
+        with _TABLE_LOCK:
+            df = cache.setdefault(key, df)
     return df

@@ -283,13 +283,21 @@ def cardinality_guard(
     Reference: src/s3_ccdi_to_sra.py:1157-1183 (library_ID → >1
     sample dropped), src/s3_ccdi_to_dbgap.py:276-321 (SAMPLE_ID → >1
     SUBJECT_ID is an error).  Returns (violations, clean_rows).
+    ``clean_rows`` is one window over ``df`` rather than an anti-join
+    against the violations, so it scans ``df`` once; rows with a null
+    key are kept, as the anti-join kept them.
     """
     bad_keys = (
         df.groupBy(key)
         .agg(F.countDistinct(dependent).alias("n_dependents"))
         .filter(F.col("n_dependents") > max_distinct)
     )
-    clean = df.join(bad_keys.select(key), on=key, how="left_anti")
+    n = F.size(F.collect_set(dependent).over(Window.partitionBy(key)))
+    clean = (
+        df.withColumn("__n__", n)
+        .filter((F.col("__n__") <= max_distinct) | F.col(key).isNull())
+        .drop("__n__")
+    )
     return bad_keys, clean
 
 

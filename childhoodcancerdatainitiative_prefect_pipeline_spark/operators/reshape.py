@@ -44,29 +44,34 @@ def spread_numbered(
     order_by: Sequence[str],
     value_cols: Sequence[str],
     max_n: int,
+    carry_cols: Sequence[str] = (),
 ) -> DataFrame:
     """W2 — fold N rows per key into numbered wide columns.
 
     Reference: src/s3_ccdi_to_sra.py:1071-1125 — files sharing a
     library_ID become ``filetype.1/filename.1/… .N`` columns.
-    One window + one pivot with an explicit 1..max_n value list.
+    One window + one aggregation keyed like the window, so the two
+    share a single exchange: value ``c`` of slot ``i`` is
+    ``max(when(row_number == i, c))``.  ``carry_cols`` are per-key
+    constants carried along as ``max`` over ALL of the key's rows
+    (slots past ``max_n`` included).  Output columns: ``key``,
+    ``*carry_cols``, then ``c.1`` for each value column, ``c.2``, ….
     """
     w = Window.partitionBy(key).orderBy(*[F.col(c) for c in order_by])
-    numbered = df.withColumn("__idx__", F.row_number().over(w)).filter(
-        F.col("__idx__") <= max_n
+    idx = F.col("__idx__")
+    numbered = df.withColumn("__idx__", F.row_number().over(w))
+    if not carry_cols:
+        # rows past max_n feed nothing: the filter becomes a map-side
+        # WindowGroupLimit that drops them before the exchange
+        numbered = numbered.filter(idx <= max_n)
+    return numbered.groupBy(key).agg(
+        *[F.max(c).alias(c) for c in carry_cols],
+        *[
+            F.max(F.when(idx == i, F.col(c))).alias(f"{c}.{i}")
+            for i in range(1, max_n + 1)
+            for c in value_cols
+        ],
     )
-    aggs = [F.first(c).alias(c) for c in value_cols]
-    wide = numbered.groupBy(key).pivot("__idx__", list(range(1, max_n + 1))).agg(*aggs)
-    # Spark names pivoted cols "<idx>_<value>"; normalize to "<value>.<idx>"
-    renames = {}
-    for idx in range(1, max_n + 1):
-        for c in value_cols:
-            src = f"{idx}_{c}" if len(value_cols) > 1 else str(idx)
-            if src in wide.columns:
-                renames[src] = f"{c}.{idx}"
-    for src, dst in renames.items():
-        wide = wide.withColumnRenamed(src, dst)
-    return wide
 
 
 def unpivot_numbered(
@@ -79,25 +84,21 @@ def unpivot_numbered(
     """W3 — reverse of W2: numbered wide columns back to long rows.
 
     Reference: src/s3_ccdi_to_sra.py:408-447 (previous-submission
-    unpivot).  Uses ``stack`` via the built-in ``unpivot`` per index
-    then drops all-null rows.
+    unpivot).  One pass over ``df``: every index whose value columns
+    are all present becomes one struct of an array, the array is
+    exploded and all-null rows are dropped.
     """
-    parts = []
-    for idx in range(1, max_n + 1):
-        sel = [F.col(c) for c in key_cols] + [F.lit(idx).alias(idx_alias)]
-        missing = False
-        for c in value_cols:
-            src = f"{c}.{idx}"
-            if src not in df.columns:
-                missing = True
-                break
-            sel.append(F.col(f"`{src}`").alias(c))
-        if missing:
-            continue
-        parts.append(df.select(*sel))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
+    slots = [
+        F.struct(
+            F.lit(idx).alias(idx_alias),
+            *[F.col(f"`{c}.{idx}`").alias(c) for c in value_cols],
+        )
+        for idx in range(1, max_n + 1)
+        if all(f"{c}.{idx}" in df.columns for c in value_cols)
+    ]
+    out = df.select(
+        *key_cols, F.explode(F.array(*slots)).alias("__slot__")
+    ).select(*key_cols, "__slot__.*")
     cond = None
     for c in value_cols:
         piece = F.col(c).isNotNull()

@@ -21,10 +21,15 @@ pipeline stages, in the reference's order:
 8. W2 spread: one row per library with ``filetype.N/filename.N/
    MD5_checksum.N`` columns (``spread_sra_df``, :1071-1125).
 
-Spark-first: every stage is a narrow projection or a single keyed
-shuffle; the only exchanges are the A10 aggregate, the keep-last
-window, the filename-dup window, and the final spread — all on
-manifest-sized data, all partial-aggregated map-side first.
+Spark-first: one lazy plan, no construction-time job.  Every stage is
+a narrow projection or a single keyed shuffle; the plan's own
+exchanges are the stage-1 dedup, the A10 window on library_ID, the
+keep-last window on (library_ID, filename), the filename-dup window,
+and the spread's library_ID window, whose partitioning the final
+aggregation reuses — all on manifest-sized data.  Each input is
+scanned once, and a consumer that reads only some output columns
+(the release dashboard counts rows and libraries) lets Catalyst prune
+the rest.
 """
 
 from __future__ import annotations
@@ -140,21 +145,15 @@ def ccdi_to_sra(
         merged = cur
     merged = merged.drop("__pri__")
 
-    # stage 7 — then materialize: the merged long frame feeds BOTH the
-    # spread and the per-library attribute re-attach, and without the
-    # checkpoint stages 1-7 (dedup, reformat, filters, cardinality
-    # guard, previous-submission merge) replay once per consumer.
-    merged = duplicate_filename_fix(merged).localCheckpoint()
+    # stage 7 — lazy: the merged long frame has ONE consumer (stage 8)
+    merged = duplicate_filename_fix(merged)
 
-    # stage 8 — spread + re-attach the per-library constants
-    wide = spread_numbered(
+    # stage 8 — spread + the per-library constants in one aggregation
+    return spread_numbered(
         merged,
         key="library_ID",
         order_by=["filename"],
         value_cols=list(SRA_FILE_COLS),
         max_n=max_files_per_library,
+        carry_cols=[c for c in group_cols if c != "library_ID"],
     )
-    attrs = merged.groupBy("library_ID").agg(
-        *[F.max(c).alias(c) for c in group_cols if c != "library_ID"]
-    )
-    return attrs.join(wide, on="library_ID")

@@ -17157,68 +17157,69 @@ SELECT * FROM v CROSS JOIN d CROSS JOIN s CROSS JOIN c"""
     "before release",
 )
 def ccdi_release_dashboard_query(spark, sf_dir):
-    viol = REGISTRY["curation_violations"].fn(spark, sf_dir)
-    dcf = REGISTRY["ccdi_to_dcf_index"].fn(spark, sf_dir)
-    sra = REGISTRY["ccdi_to_sra"].fn(spark, sf_dir)
-    cds = REGISTRY["cds_flatten"].fn(spark, sf_dir)
-    v = viol.agg(
-        F.count("*").alias("n_violations"),
-        F.count(F.when(F.col("severity") == "error", True)).alias("n_errors"),
-        F.countDistinct("node").alias("n_nodes_affected"),
-    )
-    d = dcf.agg(
-        F.count("*").alias("n_index_rows"),
-        F.countDistinct("guid").alias("n_guids"),
-        F.sum("size").alias("total_bytes"),
-    )
-    s = sra.agg(
-        F.count("*").alias("n_sra_rows"),
-        F.countDistinct("library_ID").alias("n_libraries"),
-    )
-    c = cds.agg(
-        F.count("*").alias("n_cds_rows"),
-        F.countDistinct("participant_id").alias("n_cds_participants"),
-    )
-    # Materialize each one-row rollup eagerly: the four composed flows
-    # then run as four independent jobs instead of one mega-plan that
+    rollups = {
+        "curation_violations": lambda viol: viol.agg(
+            F.count("*").alias("n_violations"),
+            F.count(F.when(F.col("severity") == "error", True)).alias("n_errors"),
+            F.countDistinct("node").alias("n_nodes_affected"),
+        ),
+        "ccdi_to_dcf_index": lambda dcf: dcf.agg(
+            F.count("*").alias("n_index_rows"),
+            F.countDistinct("guid").alias("n_guids"),
+            F.sum("size").alias("total_bytes"),
+        ),
+        "ccdi_to_sra": lambda sra: sra.agg(
+            F.count("*").alias("n_sra_rows"),
+            F.countDistinct("library_ID").alias("n_libraries"),
+        ),
+        "cds_flatten": lambda cds: cds.agg(
+            F.count("*").alias("n_cds_rows"),
+            F.countDistinct("participant_id").alias("n_cds_participants"),
+        ),
+    }
+    # Each one-row rollup is materialized eagerly, so the four composed
+    # flows run as four independent jobs instead of one mega-plan that
     # re-plans every sub-flow's scans under a single cross-join tree
     # (VERDICT r03 item 4 — at scale these would be read back from the
     # flows' materialized release artifacts, not recomputed).
-    # r10 (guide §2.6 "overlap independent jobs"): the four eager
-    # checkpoints are independent — submit them from a small thread
-    # pool so the later flows' tasks back-fill executors freed by the
-    # earlier flows' stragglers, instead of running strictly
-    # sequentially.  Results are unchanged (each checkpoint touches
-    # disjoint state); FIFO scheduling gives exactly the back-fill
-    # behaviour the guide describes.  Measured at the 10× replica
-    # (interleaved same-session A/B pairs, warm runs): 97.7→83.5 s and
-    # 79.9→61.4 s — a consistent 15-23% (cds, the largest flow, keeps
-    # most cores busy, so the three smaller flows only back-fill its
-    # scheduling gaps and stragglers).
-    # Correct concurrent labelling/cancellation relies on PySpark
-    # pinned-thread mode (default since 3.2; ADVICE r10).  If one
-    # checkpoint fails, cancel the SIBLINGS' still-running jobs (via a
+    # The four flows are independent (guide §2.6 "overlap independent
+    # jobs"), so each pool worker BUILDS its flow, then its rollup, then
+    # checkpoints the rollup: construction overlaps too (cds_flatten's
+    # eager construction-time checkpoints run beside the other three
+    # flows' driver-side planning), and the later flows' tasks back-fill
+    # executors freed by the earlier flows' stragglers.  Every job the
+    # dashboard starts, construction-time ones included, runs in the
     # shared job group — group state is thread-local, so each worker
-    # sets it) before propagating — without this the exception
-    # surfaces while the other three flows keep burning the cluster
-    # unsupervised.  Other threads' queries on a shared session are
-    # outside the group and unaffected.
-    from concurrent.futures import ThreadPoolExecutor
+    # sets it (PySpark pinned-thread mode, default since 3.2; ADVICE
+    # r10).  Measured at the 10× replica for the checkpoint overlap
+    # alone (interleaved same-session A/B pairs, warm runs): 97.7→83.5 s
+    # and 79.9→61.4 s.
+    # Cancel-on-failure: as soon as ANY worker fails, the group's
+    # running jobs are cancelled, and re-cancelled while the siblings
+    # wind down (a sibling still planning submits its next job after
+    # the first cancel); the error is raised once every worker has
+    # stopped, so nothing the dashboard started is left running.  Other
+    # threads' queries on a shared session are outside the group and
+    # unaffected.
+    from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
 
     sc = spark.sparkContext
+    group = "ccdi_release_dashboard"
 
-    def _cp(x):
-        sc.setJobGroup(
-            "ccdi_release_dashboard", "dashboard sub-flow checkpoint"
-        )
-        return x.localCheckpoint()
+    def _rollup(name):
+        sc.setJobGroup(group, f"dashboard sub-flow {name}")
+        return rollups[name](REGISTRY[name].fn(spark, sf_dir)).localCheckpoint()
 
-    try:
-        with ThreadPoolExecutor(max_workers=4) as pool:
-            v, d, s, c = pool.map(_cp, (v, d, s, c))
-    except Exception:
-        sc.cancelJobGroup("ccdi_release_dashboard")
-        raise
+    with ThreadPoolExecutor(max_workers=4) as pool:
+        futures = [pool.submit(_rollup, name) for name in rollups]
+        done, pending = wait(futures, return_when=FIRST_EXCEPTION)
+        failed = [f for f in done if f.exception() is not None]
+        while failed and pending:
+            sc.cancelJobGroup(group)
+            _, pending = wait(pending, timeout=0.5)
+    if failed:
+        failed[0].result()  # re-raises the first failure, not a cancel
+    v, d, s, c = (f.result() for f in futures)
     return v.crossJoin(d).crossJoin(s).crossJoin(c)
 
 

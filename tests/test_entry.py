@@ -55,3 +55,29 @@ def test_new_application_drops_old_entries(spark, sf_dir):
     (region,) = _handles(spark, sf_dir, ("region",))
     assert list(catalog._TABLE_CACHE) == [app_id]
     assert region.count() == 5
+
+
+def test_concurrent_first_loads_share_handles(spark, sf_dir):
+    """Threads loading at once in a session the cache has not seen yet
+    all get the same handles, kept under one applicationId entry."""
+    import threading
+
+    tables = ("region", "nation", "orders")
+    n = 6
+    barrier = threading.Barrier(n)
+    got: list[list] = [None] * n
+
+    def load(i):
+        barrier.wait()
+        got[i] = _handles(spark, sf_dir, tables)
+
+    catalog._TABLE_CACHE.clear()
+    threads = [threading.Thread(target=load, args=(i,)) for i in range(n)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert list(catalog._TABLE_CACHE) == [spark.sparkContext.applicationId]
+    assert all(a is b for hs in got[1:] for a, b in zip(got[0], hs))
+    again = _handles(spark, sf_dir, tables)
+    assert all(a is b for a, b in zip(got[0], again))

@@ -485,7 +485,7 @@ _SCAN_BUDGETS = {
     "text_trigram_backoff": 2,        # was 7 (tokenize once)
     "dedup_setsim_prefix_join": 2,    # was 8 (rarity index built once)
     "profile_expectations": 2,        # was 6 (one-row metrics frame)
-    "ccdi_to_sra": 2,                 # was 8 (merged long frame)
+    "ccdi_to_sra": 2,                 # was 8; now lazy, one scan per input
 }
 
 
@@ -504,6 +504,16 @@ def test_multi_consumer_frames_stay_materialized(spark, sf_dir, name):
         f"{name}: {n} parquet scans (budget {_SCAN_BUDGETS[name]}) — a "
         "shared frame lost its materialization and re-derives per consumer"
     )
+
+
+def test_sra_is_one_lazy_plan(spark, sf_dir):
+    """ccdi_to_sra builds no construction-time checkpoint (its plan
+    would read an ExistingRDD) and re-attaches the per-library
+    constants in the spread's own aggregation, not by a join."""
+    plan = _simple_plan(REGISTRY["ccdi_to_sra"].fn(spark, sf_dir))
+    assert "ExistingRDD" not in plan
+    assert "Join" not in plan
+    assert plan.count("Scan parquet") <= 2
 
 
 def test_star_audit_fact_table_single_scan(spark, sf_dir):
