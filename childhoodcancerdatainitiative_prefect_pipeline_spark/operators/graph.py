@@ -107,7 +107,7 @@ def transitive_children(
     this operator models removal/closure requests whose frontier is
     bounded by the (small) deletion closure.  A traversal whose
     frontier can reach graph scale is a different algorithm — use
-    ``connected_components`` / ``label_propagation`` there.
+    ``connected_components`` there.
     """
     out_cols = ["entry_id"] + ([label_col] if label_col else [])
     if cache_edges:
@@ -219,7 +219,6 @@ def connected_components(
     label_col: str = "cluster_id",
     src_col: str = "src",
     dst_col: str = "dst",
-    max_iters: int = 20,
 ) -> DataFrame:
     """Min-label propagation connected components.
 
@@ -230,13 +229,14 @@ def connected_components(
 
     Each iteration is one shuffle join (labels against the symmetrized
     edge list) plus a map-side-combined ``min`` — the classic iterative
-    CC; convergence needs O(graph diameter) rounds, and dup-cluster
-    graphs are shallow (near-clique groups), so 3-4 rounds in practice.
-    Labels are ``localCheckpoint``-ed each round: lineage stays flat and
-    the convergence probe (limit-1 count of changed labels) re-reads the
-    materialized frame instead of recomputing the chain.  For
-    billion-edge general graphs swap in large-star/small-star rounds;
-    the interface stays the same.
+    CC.  The loop runs until no label changes, which always happens:
+    labels only ever decrease.  It takes O(graph diameter) rounds, so
+    callers build shallow graphs — dup clusters as near-cliques or as
+    stars onto the group's minimum id, which converge in two rounds
+    however large the group.  Labels are ``localCheckpoint``-ed each
+    round: lineage stays flat and the convergence probe (limit-1 count
+    of changed labels) re-reads the materialized frame instead of
+    recomputing the chain.
     """
     sym = edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
     sym = sym.unionByName(
@@ -246,7 +246,7 @@ def connected_components(
         F.col(id_col).alias("node"), F.col(id_col).alias("label")
     )
     with _loop_shuffle_width(sym.sparkSession, sym.count()):
-        for _ in range(max_iters):
+        while True:
             nbr = (
                 sym.join(labels, sym["b"] == labels["node"])
                 .groupBy("a")
@@ -281,121 +281,6 @@ def connected_components(
                 break
     return labels.select(
         F.col("node").alias(id_col), F.col("label").alias(label_col)
-    )
-
-
-def connected_components_star(
-    edges: DataFrame,
-    nodes: DataFrame,
-    id_col: str = "id",
-    label_col: str = "cluster_id",
-    src_col: str = "src",
-    dst_col: str = "dst",
-    max_rounds: int = 30,
-) -> DataFrame:
-    """Large-star / small-star connected components — the scale path.
-
-    Min-label propagation (`connected_components`) needs O(diameter)
-    rounds: fine for shallow dup-cluster graphs, hopeless for a
-    100 TB web/citation graph whose diameter can be thousands.  The
-    alternating star algorithm (Kiveris et al., "Connected Components
-    in MapReduce and Beyond", SoCC'14) converges in O(log n) rounds
-    regardless of diameter, each round two self-free hash
-    aggregations + joins over the edge list:
-
-    - large-star: every node points its *larger* neighbors at the
-      minimum of its neighborhood (incl. itself);
-    - small-star: every node points its smaller-or-equal neighbors
-      at the minimum neighbor.
-
-    Both steps strictly shrink the potential function (sum of tree
-    heights) and preserve connectivity; at the fixed point the edge
-    list IS the star forest (child → root).  Edges are eagerly
-    ``localCheckpoint``-ed per round (flat lineage — same rule as
-    every iterative operator here); convergence is detected by an
-    order-insensitive checksum (count + sum of xxhash64 of the pair),
-    one tiny aggregate per round instead of a full exceptAll diff.
-
-    Returns (id_col, label_col) for every node in ``nodes`` —
-    identical output contract (and, by the tests, identical output)
-    to ``connected_components``.
-    """
-    e = (
-        edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint()
-    )
-
-    def _checksum(df: DataFrame) -> tuple:
-        # bit_xor is order-insensitive and cannot overflow under ANSI
-        # mode (a plain sum of xxhash64 values can)
-        row = df.agg(
-            F.count("*").alias("n"),
-            F.coalesce(
-                F.expr("bit_xor(xxhash64(a, b))"), F.lit(0)
-            ).alias("h"),
-        ).collect()[0]
-        return (row["n"], row["h"])
-
-    prev = _checksum(e)
-    with _loop_shuffle_width(e.sparkSession, prev[0]):
-        for _ in range(max_rounds):
-            # large-star: neighborhoods over the symmetric view
-            sym = e.unionByName(
-                e.select(F.col("b").alias("a"), F.col("a").alias("b"))
-            )
-            nbr_min = sym.groupBy(F.col("a").alias("u")).agg(
-                F.min(F.least(F.col("b"), F.col("a"))).alias("m")
-            )
-            e = (
-                sym.join(nbr_min, sym["a"] == nbr_min["u"])
-                .filter(F.col("b") > F.col("a"))
-                .select(F.col("b").alias("a"), F.col("m").alias("b"))
-                .filter(F.col("a") != F.col("b"))
-                .distinct()
-                .localCheckpoint()
-            )
-            # small-star: orient every edge child=max, parent=min
-            oriented = e.select(
-                F.greatest(F.col("a"), F.col("b")).alias("u"),
-                F.least(F.col("a"), F.col("b")).alias("v"),
-            )
-            nbr_min = oriented.groupBy("u").agg(F.min("v").alias("m"))
-            joined = oriented.join(nbr_min, "u")
-            e = (
-                joined.select(F.col("v").alias("a"), F.col("m").alias("b"))
-                .unionByName(
-                    joined.select(
-                        F.col("u").alias("a"), F.col("m").alias("b")
-                    )
-                )
-                .filter(F.col("a") != F.col("b"))
-                .distinct()
-                .localCheckpoint()
-            )
-            cur = _checksum(e)
-            if cur == prev:
-                break
-            prev = cur
-
-    # fixed point: e maps child → root; roots and isolated nodes → self.
-    # The min-aggregate guarantees ONE row per node even if max_rounds
-    # ran out mid-convergence (a node can transiently hold several
-    # parents) — labels are then non-final but the one-row-per-node
-    # output contract still holds, matching connected_components.
-    membership = (
-        e.select(F.col("a").alias("node"), F.col("b").alias("label"))
-        .groupBy("node")
-        .agg(F.min("label").alias("label"))
-    )
-    return (
-        nodes.select(F.col(id_col).alias("node"))
-        .join(membership, "node", "left")
-        .select(
-            F.col("node").alias(id_col),
-            F.coalesce(F.col("label"), F.col("node")).alias(label_col),
-        )
     )
 
 

@@ -5317,9 +5317,10 @@ def necrosis_tumor_fill(spark, sf_dir):
 
 # ---------------------------------------------------------------------------
 # Dup-pair → dup-cluster canonicalization (LLM-data op): exact-dup
-# CHAIN edges over documents (lag within each md5 group) fed to
+# edges over documents (each doc → its md5 group's min doc_id) fed to
 # min-label-propagation connected components; oracle is a recursive
-# CTE computing min-reachable-id per doc.
+# CTE computing min-reachable-id per doc over a lag chain per group —
+# a different edge set with the same components.
 # ---------------------------------------------------------------------------
 
 _CLUSTER_ORACLE = """WITH RECURSIVE g AS (
@@ -5341,11 +5342,19 @@ SELECT a AS doc_id, min(b) AS cluster_id FROM reach GROUP BY a"""
 
 
 @register(
+    "dedup_cluster_star",
+    _CLUSTER_ORACLE,
+    "dup-cluster canonicalization: dedup_cluster_components under the "
+    "name bench.py's sweep and the benchmark's linkage workload call; "
+    "same recursive-CTE oracle",
+)
+@register(
     "dedup_cluster_components",
     _CLUSTER_ORACLE,
-    "dup-cluster canonicalization (LLM-data op): chain edges per "
-    "exact-dup group → min-label-propagation connected components "
-    "(operators/graph.py); recursive-CTE oracle",
+    "dup-cluster canonicalization (LLM-data op): star edges per "
+    "exact-dup group (doc → the group's min doc_id) → min-label-"
+    "propagation connected components (operators/graph.py); "
+    "recursive-CTE oracle over a lag chain per group",
 )
 def dedup_cluster_components(spark, sf_dir):
     from pyspark.sql import Window
@@ -5356,40 +5365,16 @@ def dedup_cluster_components(spark, sf_dir):
     g = documents.select(
         "doc_id", F.md5(F.encode(F.col("text"), "UTF-8")).alias("h")
     )
-    w = Window.partitionBy("h").orderBy("doc_id")
-    ordered = g.withColumn("prev", F.lag("doc_id").over(w))
-    edges = ordered.filter(F.col("prev").isNotNull()).select(
-        F.col("prev").alias("src"), F.col("doc_id").alias("dst")
+    # a star onto the group's min id has diameter 2 however many
+    # replicas share a text; a lag chain's diameter grows with the
+    # group and min-label needs one round per hop
+    rooted = g.withColumn(
+        "root", F.min("doc_id").over(Window.partitionBy("h"))
+    )
+    edges = rooted.filter(F.col("doc_id") != F.col("root")).select(
+        F.col("root").alias("src"), F.col("doc_id").alias("dst")
     )
     return connected_components(
-        edges, g.select("doc_id"), id_col="doc_id", label_col="cluster_id"
-    )
-
-
-@register(
-    "dedup_cluster_star",
-    _CLUSTER_ORACLE,
-    "dup-cluster canonicalization on the O(log n)-round large/small-"
-    "star algorithm (operators/graph.py::connected_components_star) — "
-    "same edge construction and the same recursive-CTE oracle as "
-    "dedup_cluster_components, so the scale-path algorithm itself is "
-    "hash-certified, not just unit-pinned",
-)
-def dedup_cluster_star(spark, sf_dir):
-    from pyspark.sql import Window
-
-    from .operators.graph import connected_components_star
-
-    (documents,) = _t(spark, sf_dir, "documents")
-    g = documents.select(
-        "doc_id", F.md5(F.encode(F.col("text"), "UTF-8")).alias("h")
-    )
-    w = Window.partitionBy("h").orderBy("doc_id")
-    ordered = g.withColumn("prev", F.lag("doc_id").over(w))
-    edges = ordered.filter(F.col("prev").isNotNull()).select(
-        F.col("prev").alias("src"), F.col("doc_id").alias("dst")
-    )
-    return connected_components_star(
         edges, g.select("doc_id"), id_col="doc_id", label_col="cluster_id"
     )
 
@@ -5676,12 +5661,20 @@ def corpus_stratified_sample(spark, sf_dir):
 )
 def dedup_minhash_clusters(spark, sf_dir):
     from .operators.dedup import minhash_dedup
-    from .operators.graph import connected_components
 
     (documents,) = _t(spark, sf_dir, "documents")
-    pairs = minhash_dedup(documents, threshold=0.7)
-    # same materialization as the md5 twin: nodes + CC iterations must
-    # not re-run the signature pipeline per reference
+    return _pair_clusters(minhash_dedup(documents, threshold=0.7))
+
+
+def _pair_clusters(pairs: DataFrame) -> DataFrame:
+    """(doc_id, cluster_id) for every doc in a MinHash ``(id_a, id_b)``
+    pair set, clustered by min-label connected components."""
+    from .operators.graph import connected_components
+
+    # the pair set feeds the node derivation (twice) AND the CC
+    # iterations — checkpoint so the signature + banding pipeline runs
+    # ONCE (450 s -> signature-cost once at the 10x probe of the md5
+    # composition, whose per-shingle hashing is the expensive part)
     edges = pairs.select(
         F.col("id_a").alias("src"), F.col("id_b").alias("dst")
     ).localCheckpoint()
@@ -12129,24 +12122,7 @@ SELECT a AS doc_id, MIN(b) AS cluster_id FROM reach GROUP BY a"""
     "(dedup_minhash_clusters) is the same plan at scale",
 )
 def dedup_minhash_clusters_md5(spark, sf_dir):
-    from .operators.graph import connected_components
-
-    pairs = REGISTRY["dedup_minhash_pairs_md5"].fn(spark, sf_dir)
-    # the pair set feeds the node derivation (twice) AND the CC
-    # iterations — checkpoint so the 64-hash signature + banding
-    # pipeline runs ONCE (450 s -> signature-cost once at the 10x
-    # probe; the md5 twin's per-shingle hashing is the expensive part)
-    edges = pairs.select(
-        F.col("id_a").alias("src"), F.col("id_b").alias("dst")
-    ).localCheckpoint()
-    nodes = (
-        edges.select(F.col("src").alias("doc_id"))
-        .unionByName(edges.select(F.col("dst").alias("doc_id")))
-        .distinct()
-    )
-    return connected_components(
-        edges, nodes, id_col="doc_id", label_col="cluster_id"
-    )
+    return _pair_clusters(REGISTRY["dedup_minhash_pairs_md5"].fn(spark, sf_dir))
 
 
 _NOVELTY_ORACLE = rf"""WITH {_TOKS_CTE},

@@ -5,7 +5,7 @@ For each entry: parquet scans, exchanges (shuffle vs broadcast), join
 strategies, window/WindowGroupLimit nodes, and any Python-eval nodes
 (there must be none outside the declared Arrow stages).  Declarative
 queries compile without executing; the handful of ITERATIVE entries
-(star CC, PageRank, chain resolve) run their loop's localCheckpoint
+(CC, PageRank, chain resolve) run their loop's localCheckpoint
 jobs during construction, and their row shows the post-checkpoint stub
 plan — the per-iteration cost lives in SCALE.md, not here.  Still
 cheap to regenerate, and diffs meaningfully in review: a new Exchange
@@ -71,7 +71,7 @@ def main() -> int:
         fh.write(
             "# PLANS — physical-plan inventory (auto-generated)\n\n"
             f"`scripts/plan_inventory.py` over {len(rows)} registry queries "
-            f"at {SF}. Declarative plans compile without executing; iterative entries (star CC, PageRank, chain resolve) execute their loop during construction and show the post-checkpoint stub plan — see SCALE.md for their per-iteration cost. Columns: "
+            f"at {SF}. Declarative plans compile without executing; iterative entries (CC, PageRank, chain resolve) execute their loop during construction and show the post-checkpoint stub plan — see SCALE.md for their per-iteration cost. Columns: "
             "parquet scans / shuffle Exchanges / broadcast Exchanges / "
             "join strategies / Window (+WindowGroupLimit) / Python-eval "
             "nodes (row-at-a-time; must be 0) / Arrow stages (declared "

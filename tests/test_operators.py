@@ -1222,45 +1222,15 @@ def test_connected_components_chain_and_singletons(spark):
     }
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 20: 20}
 
-
-def test_connected_components_star_matches_propagation(spark):
-    """Large/small-star CC must agree with min-label propagation on a
-    random graph AND on a deep path (the case propagation needs
-    O(diameter) rounds for and star handles in O(log n))."""
-    import random
-
-    from childhoodcancerdatainitiative_prefect_pipeline_spark.operators.graph import (
-        connected_components,
-        connected_components_star,
-    )
-
-    rng = random.Random(7)
-    n = 120
-    edge_list = [
-        (rng.randrange(n), rng.randrange(n)) for _ in range(90)
-    ]
-    edge_list = [(a, b) for a, b in edge_list if a != b]
-    edges = spark.createDataFrame(edge_list, ["src", "dst"])
-    nodes = spark.createDataFrame([(i,) for i in range(n)], ["id"])
-    base = {
-        r.id: r.cluster_id
-        for r in connected_components(edges, nodes, id_col="id").collect()
-    }
-    star = {
-        r.id: r.cluster_id
-        for r in connected_components_star(edges, nodes, id_col="id").collect()
-    }
-    assert star == base
-
-    # deep path 0-1-2-...-59: diameter 59, star must still converge
-    # within its default 12 rounds (log-convergence), labels all 0
+    # path 0-1-...-59 (diameter 59): min-label needs one round per hop,
+    # so the loop must run to convergence, not to a round cap
     path_edges = spark.createDataFrame(
         [(i, i + 1) for i in range(59)], ["src", "dst"]
     )
     path_nodes = spark.createDataFrame([(i,) for i in range(60)], ["id"])
     deep = {
         r.id: r.cluster_id
-        for r in connected_components_star(
+        for r in connected_components(
             path_edges, path_nodes, id_col="id"
         ).collect()
     }

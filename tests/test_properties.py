@@ -204,11 +204,11 @@ def test_word_ngrams_expr_matches_python_zip(spark, toks, n):
         max_size=60,
     )
 )
-def test_star_cc_matches_union_find_property(spark, edges):
-    """connected_components_star must agree with a plain union-find
+def test_connected_components_matches_union_find_property(spark, edges):
+    """connected_components must agree with a plain union-find
     on arbitrary edge lists (self-loops, duplicates, isolated nodes)."""
     from childhoodcancerdatainitiative_prefect_pipeline_spark.operators.graph import (
-        connected_components_star,
+        connected_components,
     )
 
     n = 41
@@ -234,7 +234,7 @@ def test_star_cc_matches_union_find_property(spark, edges):
     ndf = spark.createDataFrame([(i,) for i in range(n)], ["id"])
     got = {
         r["id"]: r["cluster_id"]
-        for r in connected_components_star(edf, ndf, id_col="id").collect()
+        for r in connected_components(edf, ndf, id_col="id").collect()
     }
     assert got == expected
 
