@@ -15,6 +15,10 @@ interleaved runs of the r4 and r6 trees overlap completely), so a
 bench delta without a loadavg delta is a real regression and one WITH
 a loadavg delta is weather.  Set SPARK_GRAFT_SCALE2=0 to skip the
 second scale point.
+
+Every timed entry runs through ``runner.run_query``, which releases
+the session's persisted storage after each run: no entry executes
+beside an earlier entry's checkpoints.
 """
 
 from __future__ import annotations
@@ -27,7 +31,12 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from childhoodcancerdatainitiative_prefect_pipeline_spark.queries import REGISTRY
+from childhoodcancerdatainitiative_prefect_pipeline_spark.scale_replica import (
+    ensure_replica,
+    ensure_salted_documents,
+)
 from childhoodcancerdatainitiative_prefect_pipeline_spark.session import build_session
+from runner import run_query
 
 BENCH_QUERIES = (
     "q1_pricing_summary",
@@ -99,6 +108,13 @@ SWEEP_QUERIES = (
     "graph_triangle_count_knn", "graph_kcore_membership_knn",
 )
 
+#: the 10× key-shifted replica of $SPARK_GRAFT_SF_DIR (≈ sf1), built
+#: once and reused by the scale point, ``--sweep`` and
+#: scripts/scale_probe.py (gitignored; ``rm -rf .scratch`` to drop it)
+_REPLICA = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), ".scratch", "sf1"
+)
+
 
 def _warm_tables(spark, sf_dir: str) -> None:
     """One full-column pass per table: hot page cache before run 1."""
@@ -113,49 +129,24 @@ def _warm_tables(spark, sf_dir: str) -> None:
 
 
 def _time_queries(
-    spark, sf_dir: str, spread: dict[str, list[float]] | None = None
-) -> dict[str, float]:
+    spark, sf_dir: str, names: tuple[str, ...] = BENCH_QUERIES
+) -> tuple[dict[str, float], dict[str, list[float]]]:
+    """Best-of-2 seconds per entry, and each entry's [min, max] run.
+
+    The first run pays one-off costs (file listing, codegen
+    compilation) that a long-lived session amortizes; the faster run
+    is the steady-state number, comparable at any scale factor.  The
+    spread (r11, VERDICT r10 item 6) lets a cross-round delta be read
+    against measured same-session noise instead of one cold number.
+    """
     timings: dict[str, float] = {}
-    for name in BENCH_QUERIES:
-        if name not in REGISTRY:
-            continue
-        fn = REGISTRY[name].fn
-        # two executions, report the faster: the first run pays one-off
-        # costs (file listing, codegen compilation) that a long-lived
-        # session amortizes; steady-state throughput is the comparable
-        # number at any scale factor.
-        best = float("inf")
-        runs: list[float] = []
-        for _ in range(2):
-            t0 = time.perf_counter()
-            df = fn(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            runs.append(time.perf_counter() - t0)
-            best = min(best, runs[-1])
-        timings[name] = round(best, 4)
-        if spread is not None:
-            # r11 (VERDICT r10 item 6): record the observed per-run
-            # spread so PERF's >10% regression gate can be read
-            # against measured same-session noise instead of a single
-            # cold number.  ADDITIVE only — the timed loop and the
-            # reported best-of-2 are unchanged.
-            spread[name] = [round(min(runs), 4), round(max(runs), 4)]
-        _drain_hot_buckets()
-    return timings
-
-
-def _drain_hot_buckets() -> None:
-    """Surface LSH hot-bucket warnings after query actions (ADVICE
-    r9: the guard was inert in production — only tests drained it).
-    Warnings go to stderr; stdout stays the single JSON line."""
-    try:
-        from childhoodcancerdatainitiative_prefect_pipeline_spark.operators.dedup import (
-            check_hot_buckets,
-        )
-
-        check_hot_buckets(emit=lambda m: print("WARNING: " + m, file=sys.stderr))
-    except Exception:
-        pass
+    spread: dict[str, list[float]] = {}
+    for name in names:
+        runs = run_query(spark, name, sf_dir)
+        timings[name] = round(min(runs), 4)
+        spread[name] = [timings[name], round(max(runs), 4)]
+        print(f"  {name}: {timings[name]} s", file=sys.stderr)
+    return timings, spread
 
 
 def _wait_for_quiet(
@@ -208,30 +199,9 @@ def _sweep() -> None:
     spark = build_session(app_name="ccdi-spark-sweep")
     spark.sparkContext.setLogLevel("ERROR")
 
-    from childhoodcancerdatainitiative_prefect_pipeline_spark.scale_replica import (
-        ensure_replica,
-    )
-
-    dest = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), ".scratch", "sf1"
-    )
-    built = ensure_replica(spark, sf_dir, dest, factor=10)
-    _warm_tables(spark, dest)
-
-    timings: dict[str, float] = {}
-    for name in SWEEP_QUERIES:
-        if name not in REGISTRY:
-            continue
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.perf_counter()
-            REGISTRY[name].fn(spark, dest).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            best = min(best, time.perf_counter() - t0)
-        timings[name] = round(best, 3)
-        print(f"  {name}: {timings[name]} s", file=sys.stderr)
-        _drain_hot_buckets()
+    built = ensure_replica(spark, sf_dir, _REPLICA, factor=10)
+    _warm_tables(spark, _REPLICA)
+    timings, _ = _time_queries(spark, _REPLICA, SWEEP_QUERIES)
 
     result = {
         "metric": "sweep10x",
@@ -275,13 +245,10 @@ def main() -> None:
     REGISTRY["a1_group_count"].fn(spark, sf_dir).count()
     _warm_tables(spark, sf_dir)
 
-    spread: dict[str, list[float]] = {}
-    timings = _time_queries(spark, sf_dir, spread=spread)
-    total = round(sum(timings.values()), 4)
-
+    timings, spread = _time_queries(spark, sf_dir)
     result = {
         "metric": "headline_queries_total",
-        "value": total,
+        "value": round(sum(timings.values()), 4),
         "unit": "sec",
         "queries": timings,
         # observed [min, max] of the two timed runs per query (r11,
@@ -298,19 +265,11 @@ def main() -> None:
     # across runs.  Failures here never cost the primary artifact.
     if os.environ.get("SPARK_GRAFT_SCALE2", "1") != "0":
         try:
-            from childhoodcancerdatainitiative_prefect_pipeline_spark.scale_replica import (
-                ensure_replica,
-            )
-
-            dest = os.path.join(
-                os.path.dirname(os.path.abspath(__file__)), ".scratch", "sf1"
-            )
             t0 = time.perf_counter()
-            built = ensure_replica(spark, sf_dir, dest, factor=10)
+            built = ensure_replica(spark, sf_dir, _REPLICA, factor=10)
             t_rep = round(time.perf_counter() - t0, 1)
-            _warm_tables(spark, dest)
-            spread2: dict[str, list[float]] = {}
-            t2 = _time_queries(spark, dest, spread=spread2)
+            _warm_tables(spark, _REPLICA)
+            t2, spread2 = _time_queries(spark, _REPLICA)
             point = {
                 "sf": 1.0,
                 "value": round(sum(t2.values()), 4),
@@ -336,25 +295,13 @@ def main() -> None:
             # fixture-quadratic; the 1-in-16 realistic-dup fixture
             # tracks PLAN cost for the documents-driven headliners.
             if os.environ.get("SPARK_GRAFT_SALTED", "1") != "0":
-                from childhoodcancerdatainitiative_prefect_pipeline_spark.scale_replica import (
-                    ensure_salted_documents,
-                )
-
                 sdest = ensure_salted_documents(
-                    spark, sf_dir, dest + "_salted", factor=10,
-                    keep_dup_one_in=16, link_from=dest,
+                    spark, sf_dir, _REPLICA + "_salted", factor=10,
+                    keep_dup_one_in=16, link_from=_REPLICA,
                 )
-                t3 = {}
-                for name in ("dedup_ngram_jaccard", "text_quality"):
-                    best = float("inf")
-                    for _ in range(2):
-                        t0 = time.perf_counter()
-                        REGISTRY[name].fn(spark, sdest).write.format(
-                            "noop"
-                        ).mode("overwrite").save()
-                        best = min(best, time.perf_counter() - t0)
-                    t3[name] = round(best, 4)
-                    _drain_hot_buckets()
+                t3, _ = _time_queries(
+                    spark, sdest, ("dedup_ngram_jaccard", "text_quality")
+                )
                 result["scale_points"].append(
                     {
                         "sf": 1.0,

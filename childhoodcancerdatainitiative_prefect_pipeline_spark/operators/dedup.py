@@ -226,8 +226,9 @@ def dedup_exact_keep_first(
 #: (ADVICE r9): a long-lived session that never drains would otherwise
 #: grow this forever, each entry pinning a JVM Observation — at maxlen
 #: the oldest undrained observation falls off and its JVM object
-#: becomes collectable.  Drains run automatically after bench.py query
-#: actions and before each ``__spark_entry__.queries()`` call.
+#: becomes collectable.  Drains run automatically after each
+#: ``runner.run_query`` run (bench.py, the probe scripts) and before
+#: each ``__spark_entry__.queries()`` call.
 _HOT_BUCKET_OBSERVATIONS: deque = deque(maxlen=64)
 
 
@@ -317,7 +318,7 @@ def minhash_lsh_candidates(
     forces one hash exchange the join alone didn't need — PLANS.md
     records it as the +1 exchange on ``dedup_minhash_pairs``.  Call
     :func:`check_hot_buckets` after any action to surface the warning
-    (bench.py and ``__spark_entry__.queries()`` do this
+    (``runner.run_query`` and ``__spark_entry__.queries()`` do this
     automatically); its readiness probe costs up to ~100 ms per still-
     pending observation.  Set ``None`` to opt out (plan-pin tests that
     count operators do).

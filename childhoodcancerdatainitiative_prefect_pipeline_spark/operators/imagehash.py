@@ -132,9 +132,7 @@ def image_ahash(
     )
 
 
-def ahash_near_dup_pairs(
-    hashes: DataFrame, max_hamming: int = 7, materialize: bool = True
-) -> DataFrame:
+def ahash_near_dup_pairs(hashes: DataFrame, max_hamming: int = 7) -> DataFrame:
     """Banded near-dup pair generation over (media_id, h1, h2).
 
     SimHash discipline, sized for the threshold: 8×8-bit bands (four
@@ -145,14 +143,13 @@ def ahash_near_dup_pairs(
     row-local after the band join.  The only shuffle carries
     (band, key, id) triples.
 
-    ``materialize=True`` (default) ``localCheckpoint``s the hash
-    rows: they feed both sides of the band self-join, and without it
-    the upstream decode kernel runs twice (same fix as
+    The hash rows are ``localCheckpoint``-ed: they feed both sides
+    of the band self-join, and without the checkpoint the upstream
+    decode kernel runs twice (same fix as
     ``clip_near_dup_pairs``).  Hash rows are three longs per media —
     never payload bytes.
     """
-    if materialize:
-        hashes = hashes.localCheckpoint()
+    hashes = hashes.localCheckpoint()
     bands = [
         F.struct(
             F.lit(band).alias("band"),

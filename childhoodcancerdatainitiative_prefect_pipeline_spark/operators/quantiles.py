@@ -86,7 +86,6 @@ def grouped_weighted_median(
     value_col: str,
     weight_col: str,
     bins: int = 1024,
-    materialize: bool = True,
 ) -> DataFrame:
     """Weighted median per group without a per-group global window.
 
@@ -106,14 +105,11 @@ def grouped_weighted_median(
     Returns (group_col, weighted_median).  Use the direct window when
     groups are many and small; this shape is for FEW, HUGE groups.
 
-    ``materialize=True`` (default) ``localCheckpoint``s the binned
-    frame: the histogram AND the bucket-subset filter both branch off
-    it, and Spark does not dedupe common subplans — without the
+    The binned frame is ``localCheckpoint``-ed: the histogram AND the
+    bucket-subset filter both branch off it, and Spark does not dedupe common subplans — without the
     checkpoint each downstream reference re-scans the input (the
     round-5 plan audit measured lineitem_mad_outliers at 49 fact-table
-    scans; at 100 TB each redundant scan is a full pass).  Pass
-    ``materialize=False`` to keep the plan fully lazy (streaming or
-    plan-inspection callers).
+    scans; at 100 TB each redundant scan is a full pass).
     """
     from pyspark.sql import Window
 
@@ -132,9 +128,7 @@ def grouped_weighted_median(
             F.floor((F.col(v) - F.col("__lo__")) / width), F.lit(bins - 1)
         )
     ).cast("int")
-    binned = staged.withColumn("__b__", bucket)
-    if materialize:
-        binned = binned.localCheckpoint()
+    binned = staged.withColumn("__b__", bucket).localCheckpoint()
     hist = binned.groupBy(g, "__b__").agg(
         F.sum(wd).alias("__wsum__"), F.max("__T__").alias("__T__")
     )

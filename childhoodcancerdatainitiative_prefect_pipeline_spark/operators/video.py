@@ -282,7 +282,6 @@ def clip_near_dup_pairs(
     frame_hashes: DataFrame,
     max_hamming: int = 7,
     min_matching_frames: int = 2,
-    materialize: bool = True,
 ) -> DataFrame:
     """Frame-aligned clip near-dup: band-join per (frame_no, band),
     Hamming-verify per frame, then count matching frame indices per
@@ -303,17 +302,15 @@ def clip_near_dup_pairs(
     Plan cost now scales with unique content; the contractual pair
     output is produced by narrow expansion joins that stream.
 
-    ``materialize=True`` (default) ``localCheckpoint``s the hash rows:
-    they feed the signature group-by whose result feeds four
-    consumers, and without the checkpoint the whole upstream decode
+    The hash rows are ``localCheckpoint``-ed: they feed the signature
+    group-by whose result feeds four consumers, and without the checkpoint the whole upstream decode
     (an Arrow kernel over every clip) runs twice — at 100 TB that is
     a second full decode pass.  The checkpointed frames are tiny (a
     few longs per sampled frame), never the payload bytes.
     """
     from pyspark.sql import functions as F
 
-    if materialize:
-        frame_hashes = frame_hashes.localCheckpoint()
+    frame_hashes = frame_hashes.localCheckpoint()
     sigs = (
         frame_hashes.filter(F.col("h1").isNotNull())
         .groupBy("media_id")

@@ -13762,7 +13762,10 @@ def corpus_batch_schedule_query(spark, sf_dir):
 # ids are shifted so the two id spaces are disjoint.
 # ---------------------------------------------------------------------------
 
-_ER_SHIFT = 10_000_000
+#: system-B id shift; it must exceed every customer key a scale replica
+#: can hold (scale_replica adds 1,000,000 per copy), or the two id
+#: spaces overlap and unrelated customers merge.  Still an int64.
+_ER_SHIFT = 1 << 40
 
 _GOLDEN_ORACLE = f"""WITH RECURSIVE l AS (
   SELECT c_custkey AS id,

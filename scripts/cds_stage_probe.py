@@ -13,10 +13,10 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 import urllib.request
 
-sys.path.insert(0, "/root/repo")
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _REPO)
 
 from childhoodcancerdatainitiative_prefect_pipeline_spark.queries import (  # noqa: E402
     REGISTRY,
@@ -27,6 +27,7 @@ from childhoodcancerdatainitiative_prefect_pipeline_spark.scale_replica import (
 from childhoodcancerdatainitiative_prefect_pipeline_spark.session import (  # noqa: E402
     build_session,
 )
+from runner import release_persisted, run_query  # noqa: E402
 
 
 def _api(spark, path: str):
@@ -42,7 +43,7 @@ def main() -> int:
     name = sys.argv[1] if len(sys.argv) > 1 else "cds_flatten"
     plan_out = sys.argv[2] if len(sys.argv) > 2 else None
     src = "/root/testdata/sf0.1"
-    dest = "/root/repo/.scratch/sf1"
+    dest = os.path.join(_REPO, ".scratch", "sf1")
     spark = build_session(
         app_name=f"cds-probe-{name}",
         extra_conf={"spark.ui.enabled": "true"},
@@ -50,28 +51,26 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
     ensure_replica(spark, src, dest, factor=10)
 
-    fn = REGISTRY[name].fn
     # warm run (codegen, page cache), then the measured run
     spark.sparkContext.setJobDescription(f"{name}: warm")
-    fn(spark, dest).write.format("noop").mode("overwrite").save()
+    run_query(spark, name, dest, runs=1)
 
     if plan_out:
-        df = fn(spark, dest)
+        df = REGISTRY[name].fn(spark, dest)
         mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
             "formatted"
         )
         txt = df._jdf.queryExecution().explainString(mode)
         with open(plan_out, "w") as f:
             f.write(txt)
+        release_persisted(spark)
 
     mark = max(
         (s["stageId"] for s in _api(spark, "/stages?status=complete")),
         default=-1,
     )
     spark.sparkContext.setJobDescription(f"{name}: measured")
-    t0 = time.perf_counter()
-    fn(spark, dest).write.format("noop").mode("overwrite").save()
-    wall = time.perf_counter() - t0
+    (wall,) = run_query(spark, name, dest, runs=1)
 
     stages = [
         s

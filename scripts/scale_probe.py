@@ -1,23 +1,32 @@
 #!/usr/bin/env python
 """Scale probe: replicate sf0.1 tables ~10x (key-shifted) and re-time
-the headline queries.  Evidence that the plans scale linearly rather
-than blowing up on data volume; results recorded in SCALE.md.
+the standing sweep list (or ``SCALE_QUERIES``).  Evidence that the
+plans scale linearly rather than blowing up on data volume; results
+recorded in SCALE.md.
 
-Writes only inside the repo (.scratch/, gitignored).
+Core scaling at the 10× point: run it once per core count and compare
+the two JSON lines (each records its ``cpus``), e.g.
+``SPARK_GRAFT_CPUS=8 SCALE_QUERIES=cds_flatten,graph_pagerank_topk
+python scripts/scale_probe.py``.
+
+Writes only inside the repo (.scratch/, gitignored).  Replicas are
+kept and reused through their ``_REPLICA_FACTOR`` marker; ``rm -rf
+.scratch`` drops them.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import shutil
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from childhoodcancerdatainitiative_prefect_pipeline_spark.queries import REGISTRY
+from childhoodcancerdatainitiative_prefect_pipeline_spark.scale_replica import (
+    ensure_replica,
+)
 from childhoodcancerdatainitiative_prefect_pipeline_spark.session import build_session
+from runner import run_query
 
 SRC = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 FACTOR = int(os.environ.get("SCALE_FACTOR", "10"))
@@ -27,11 +36,6 @@ FACTOR = int(os.environ.get("SCALE_FACTOR", "10"))
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 DEST = os.path.join(
     _REPO, ".scratch", "sf1" if FACTOR == 10 else f"x{FACTOR}"
-)
-
-from childhoodcancerdatainitiative_prefect_pipeline_spark.scale_replica import (  # noqa: E402
-    KEY_SHIFTS,
-    ensure_replica,  # noqa: F401 - KEY_SHIFTS re-exported for callers
 )
 
 
@@ -75,19 +79,13 @@ def main():
     runs = int(os.environ.get("SCALE_RUNS", "2"))
     timings = {}
     for name in queries:
-        best = float("inf")
-        for _ in range(runs):
-            t0 = time.perf_counter()
-            REGISTRY[name].fn(spark, DEST).write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-        timings[name] = round(best, 3)
+        timings[name] = round(min(run_query(spark, name, DEST, runs)), 3)
         print(f"  {name}: {timings[name]} s", file=sys.stderr)
     print(json.dumps({"metric": "scale_probe", "factor": FACTOR,
+                      "cpus": os.environ.get("SPARK_GRAFT_CPUS", "*"),
                       "queries": timings,
                       "total": round(sum(timings.values()), 3)}))
     spark.stop()
-    if os.environ.get("KEEP_SCRATCH") != "1":
-        shutil.rmtree(os.path.dirname(DEST), ignore_errors=True)
 
 
 if __name__ == "__main__":

@@ -22,7 +22,7 @@ Arms (same session, same replica, back to back):
   aliased   — the registry query exactly as shipped
   dealiased — content unique per key; output tracks PLAN cost
 
-Run: SCALE_FACTOR=100 KEEP_SCRATCH=1 python scripts/video_dealias_probe.py
+Run: SCALE_FACTOR=100 python scripts/video_dealias_probe.py
 Results recorded in SCALE.md (round-10 section).
 """
 

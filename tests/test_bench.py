@@ -1,9 +1,38 @@
-"""bench.py helpers that need no Spark session: the bounded quiet-box
-wait before the JVM starts and the load stamp taken after the run."""
+"""The query-timing loop that bench.py and the probe scripts share
+(``runner.run_query``, at sf0.001), and bench.py's helpers that need no
+Spark session: the bounded quiet-box wait before the JVM starts and
+the load stamp taken after the run."""
 
 from __future__ import annotations
 
 import bench
+from childhoodcancerdatainitiative_prefect_pipeline_spark.operators.dedup import (
+    check_hot_buckets,
+)
+from childhoodcancerdatainitiative_prefect_pipeline_spark.queries import REGISTRY
+from runner import run_query
+
+
+def test_run_query_times_each_run_and_releases_storage(spark, sf_dir):
+    """Each run is timed, and the checkpoints pagerank's loop leaves
+    behind are released, so the next query starts on an empty store."""
+    secs = run_query(spark, "graph_pagerank_topk", sf_dir, runs=2)
+    assert len(secs) == 2 and all(s > 0 for s in secs)
+    # RDDs holding cached or checkpointed blocks in the session
+    assert len(spark.sparkContext._jsc.sc().getRDDStorageInfo()) == 0
+
+
+def test_run_query_drains_hot_bucket_observations(spark, sf_dir):
+    """An action on an LSH entry completes its hot-bucket observation;
+    run_query drains it, so none stays queued for a later check."""
+    quiet = {"emit": lambda m: None}
+    check_hot_buckets(**quiet)
+    REGISTRY["dedup_minhash_pairs"].fn(spark, sf_dir).write.format(
+        "noop"
+    ).mode("overwrite").save()
+    assert check_hot_buckets(clear=False, **quiet) != []
+    run_query(spark, "dedup_minhash_pairs", sf_dir, runs=1)
+    assert check_hot_buckets(clear=False, **quiet) == []
 
 
 def test_bench_wait_for_quiet(monkeypatch):

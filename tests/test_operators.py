@@ -941,9 +941,19 @@ def test_transitive_children_multi_hop_and_cycle(spark):
     seeds = spark.createDataFrame([("a", "n1")], ["entry_id", "node"])
     got = {
         (r.entry_id, r.node)
-        for r in transitive_children(edges, seeds, max_hops=10).collect()
+        for r in transitive_children(edges, seeds).collect()
     }
     assert got == {("a", "n1"), ("b", "n2"), ("c", "n3"), ("d", "n4")}
+
+    # a 40-node chain: the closure runs until the frontier is empty,
+    # however many hops that takes
+    chain = spark.createDataFrame(
+        [(f"v{i}", f"v{i + 1}", "n") for i in range(39)],
+        ["parent", "child", "node"],
+    )
+    seed0 = spark.createDataFrame([("v0", "n")], ["entry_id", "node"])
+    got = {r.entry_id for r in transitive_children(chain, seed0).collect()}
+    assert got == {f"v{i}" for i in range(40)}
 
 
 def test_cascade_remove_kept_frames(spark):

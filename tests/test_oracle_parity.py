@@ -16,6 +16,7 @@ import pytest
 
 from childhoodcancerdatainitiative_prefect_pipeline_spark.catalog import TESTDATA_TABLES
 from childhoodcancerdatainitiative_prefect_pipeline_spark.queries import REGISTRY
+from runner import release_persisted
 
 ORACLE_NAMES = [n for n, q in REGISTRY.items() if q.oracle is not None]
 
@@ -114,9 +115,7 @@ def test_oracle_parity_all(spark, sf_dir):
                 )
                 if f
             )
-        jrdds = spark.sparkContext._jsc.getPersistentRDDs()
-        for rid in list(jrdds.keySet().toArray()):
-            jrdds.get(rid).unpersist()
+        release_persisted(spark)
     assert failures == [], (
         f"{len(failures)} parity failures:\n" + "\n".join(failures)
     )
@@ -131,6 +130,30 @@ def test_oracle_parity_all(spark, sf_dir):
 def test_oracle_parity(spark, sf_dir, name):
     failure = _check_one(spark, sf_dir, name)
     assert failure is None, failure
+
+
+def test_entity_golden_record_keeps_replica_keys_apart(spark, sf_dir, tmp_path):
+    """System-B ids clear every customer key: a key ``k`` and the key
+    ``k + 10,000,000`` (customer ``k`` in a scale replica's 11th copy)
+    stay in separate clusters, and the entry still matches its
+    oracle."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    for t in TESTDATA_TABLES:
+        if t != "customer":
+            os.symlink(f"{sf_dir}/{t}.parquet", tmp_path / f"{t}.parquet")
+    keys = [1, 10_000_001]  # neither key's name is perturbed on side B
+    pq.write_table(
+        pa.table({
+            "c_custkey": pa.array(keys, pa.int64()),
+            "c_mktsegment": ["BUILDING", "BUILDING"],
+        }),
+        tmp_path / "customer.parquet",
+    )
+    got = REGISTRY["entity_golden_record"].fn(spark, str(tmp_path)).collect()
+    assert {r.cluster_id: r.n_members for r in got} == {k: 2 for k in keys}
+    assert _check_one(spark, str(tmp_path), "entity_golden_record") is None
 
 
 def test_no_hugeint_oracle_output_types(sf_dir):
@@ -210,9 +233,13 @@ def test_rows_frames_have_audited_total_orders():
 
 
 def test_all_queries_return_rows_or_valid_empty(spark, sf_dir):
-    # threaded for the same reason as test_oracle_parity_all (this was
-    # the single slowest test in the suite at ~5 min serial: every
-    # registry query constructed + executed one at a time)
+    """Every entry without an oracle builds, has columns and executes.
+
+    Oracle-backed entries are executed to a full ``collect()`` and
+    column-checked by ``test_oracle_parity_all`` (or by the per-entry
+    tier), so running them here again only doubled Tier-1's longest
+    stretch.
+    """
     from concurrent.futures import ThreadPoolExecutor
 
     def check(item):
@@ -226,17 +253,10 @@ def test_all_queries_return_rows_or_valid_empty(spark, sf_dir):
             return f"{name}: {type(ex).__name__}: {ex}"
         return None
 
-    items = list(REGISTRY.items())
-    failures: list[str] = []
-    batch_size = 24
-    for i in range(0, len(items), batch_size):
-        with ThreadPoolExecutor(max_workers=6) as pool:
-            failures.extend(
-                f for f in pool.map(check, items[i : i + batch_size]) if f
-            )
-        jrdds = spark.sparkContext._jsc.getPersistentRDDs()
-        for rid in list(jrdds.keySet().toArray()):
-            jrdds.get(rid).unpersist()
+    items = [(n, q) for n, q in REGISTRY.items() if q.oracle is None]
+    with ThreadPoolExecutor(max_workers=6) as pool:
+        failures = [f for f in pool.map(check, items) if f]
+    release_persisted(spark)
     assert failures == [], "\n".join(failures)
 
 

@@ -12,6 +12,7 @@ from __future__ import annotations
 import pytest
 
 from childhoodcancerdatainitiative_prefect_pipeline_spark.queries import REGISTRY
+from runner import release_persisted
 
 
 def _plan(df) -> str:
@@ -128,9 +129,7 @@ def test_no_python_udfs_in_oracle_checked_plans(spark, sf_dir):
 
     with ThreadPoolExecutor(max_workers=6) as pool:
         offenders = [n for n in pool.map(check, REGISTRY.items()) if n]
-    jrdds = spark.sparkContext._jsc.getPersistentRDDs()
-    for rid in list(jrdds.keySet().toArray()):
-        jrdds.get(rid).unpersist()
+    release_persisted(spark)
     assert not offenders, f"python in hot path: {offenders}"
 
 
@@ -586,9 +585,7 @@ def test_no_unrouted_bigint_moment_sums(spark, sf_dir):
 
     with ThreadPoolExecutor(max_workers=6) as pool:
         offenders = [o for o in pool.map(check, REGISTRY.items()) if o]
-    jrdds = spark.sparkContext._jsc.getPersistentRDDs()
-    for rid in list(jrdds.keySet().toArray()):
-        jrdds.get(rid).unpersist()
+    release_persisted(spark)
     assert not offenders, (
         "BIGINT moment sums without decimal routing (int64 wraparound "
         f"risk at scale): {offenders}"
