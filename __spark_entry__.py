@@ -13,6 +13,9 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from childhoodcancerdatainitiative_prefect_pipeline_spark.operators.dedup import (
+    check_hot_buckets,
+)
 from childhoodcancerdatainitiative_prefect_pipeline_spark.queries import REGISTRY
 
 
@@ -30,14 +33,7 @@ def _drained(fn: Callable) -> Callable:
     """
 
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        try:
-            from childhoodcancerdatainitiative_prefect_pipeline_spark.operators.dedup import (
-                check_hot_buckets,
-            )
-
-            check_hot_buckets()
-        except Exception:
-            pass
+        check_hot_buckets()
         return fn(spark, sf_dir)
 
     return run

@@ -36,13 +36,6 @@ TESTDATA_TABLES: tuple[str, ...] = (
     "embeddings",
 )
 
-#: Stable ingest row index column.  The reference reports 1-based
-#: Excel coordinates (+2 offset, src/s3_validationry_refactored.py:150);
-#: we capture an index at read time because monotonically_increasing_id
-#: is not stable across shuffles.
-ROW_INDEX_COL = "__row_index__"
-
-
 def normalize_na(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
     """Map the reference NA bank to true nulls on string columns.
 
@@ -62,20 +55,6 @@ def normalize_na(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
         else:
             exprs.append(F.col(c))
     return df.select(*exprs)
-
-
-def with_row_index(df: DataFrame, order_by: list[str]) -> DataFrame:
-    """Attach a deterministic 1-based row index ordered by ``order_by``.
-
-    Spark equivalent of the reference's "+2 Excel row" bookkeeping —
-    a global row_number window.  Use only on manifest-sized tables
-    (the single-partition window is the documented cost); large fact
-    tables should carry a natural key instead.
-    """
-    from pyspark.sql import Window
-
-    w = Window.orderBy(*[F.col(c) for c in order_by])
-    return df.withColumn(ROW_INDEX_COL, F.row_number().over(w))
 
 
 @dataclass

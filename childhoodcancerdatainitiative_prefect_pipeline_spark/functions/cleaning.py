@@ -1,4 +1,4 @@
-"""Value-cleaning scalar functions (SURVEY.md §2.10: F1-F6, F14, F21).
+"""Value-cleaning scalar functions (SURVEY.md §2.10: F1, F3-F6, F14).
 
 These are the CatchERR-side rewrites: every helper returns a Column
 expression (JVM-side, codegen-friendly) — no Python UDFs in the hot
@@ -18,15 +18,6 @@ def trim_all(c: Column | str) -> Column:
     return F.trim(F.col(c) if isinstance(c, str) else c)
 
 
-def whitespace_violation(c: Column | str) -> Column:
-    """F2 — true when a cell differs from its trimmed form.
-
-    Reference: src/s3_validationry_refactored.py:206-252.
-    """
-    col = F.col(c) if isinstance(c, str) else c
-    return col.isNotNull() & (col != F.trim(col))
-
-
 def strip_code_prefix(c: Column | str, pattern: str = r"^[^:]*\d[^:]*\s*:\s*") -> Column:
     """F3 — remove ``"9999/9 : "`` / ``"C##.# : "`` code prefixes.
 
@@ -34,20 +25,6 @@ def strip_code_prefix(c: Column | str, pattern: str = r"^[^:]*\d[^:]*\s*:\s*") -
     """
     col = F.col(c) if isinstance(c, str) else c
     return F.regexp_replace(col, pattern, "")
-
-
-def strip_code_prefix_per_element(c: Column | str, sep: str = ";") -> Column:
-    """F3 per ';'-element variant (anatomic sites are arrays).
-
-    Reference: src/s3_catcherry.py:278-304.  Uses ``transform`` over
-    the split array — stays JVM-side.
-    """
-    col = F.col(c) if isinstance(c, str) else c
-    cleaned = F.transform(
-        F.split(col, sep),
-        lambda x: F.regexp_replace(F.trim(x), r"^C\d+(\.\d+)?\s*:\s*", ""),
-    )
-    return F.concat_ws(sep, cleaned)
 
 
 #: F4 — non-ASCII / SRA-hostile character substitutions
@@ -103,26 +80,8 @@ def title_case_except(c: Column | str, keep_upper: Sequence[str] = ("AND", "OR",
     return F.concat_ws(" ", fixed)
 
 
-def apply_enum_case_fix(c: Column | str, vocabulary: Sequence[str]) -> Column:
-    """F5/CatchERR — case-insensitive snap to the canonical enum term.
-
-    Reference: src/s3_catcherry.py:508-541 (casefold compare against
-    the Terms-and-Value-Sets vocabulary, rewrite on unique match).
-    Built as a ``when`` chain over the (small, broadcast-sized)
-    vocabulary — for large vocabularies use a broadcast join instead
-    (operators.joins.lookup_join on a lowered key).
-    """
-    col = F.col(c) if isinstance(c, str) else c
-    expr: Column | None = None
-    for term in vocabulary:
-        cond = F.lower(col) == term.lower()
-        expr = F.when(cond, F.lit(term)) if expr is None else expr.when(cond, F.lit(term))
-    return expr.otherwise(col) if expr is not None else col
-
-
 def map_values(
-    c: Column | str, mapping: Mapping[str, str], default_to_original: bool = True,
-    unknown_value: str | None = None,
+    c: Column | str, mapping: Mapping[str, str], unknown_value: str | None = None
 ) -> Column:
     """F6/F16 — hardcoded normalization maps as a ``when`` chain.
 
@@ -140,7 +99,7 @@ def map_values(
         return col
     if unknown_value is not None:
         return expr.otherwise(F.lit(unknown_value))
-    return expr.otherwise(col) if default_to_original else expr
+    return expr.otherwise(col)
 
 
 def pad_description(c: Column | str, min_len: int = 250) -> Column:
@@ -150,18 +109,6 @@ def pad_description(c: Column | str, min_len: int = 250) -> Column:
     """
     col = F.coalesce(F.col(c) if isinstance(c, str) else c, F.lit(""))
     return F.concat(F.rpad(col, min_len, " "), F.lit("."))
-
-
-def fill_with_mapping_default(
-    existing: Column | str, mapped: Column | str, default: str = "Not Reported"
-) -> Column:
-    """F21 — null-only fill from a mapping with literal fallback.
-
-    Reference: src/s3_catcherry.py:666-695 (diagnosis→category).
-    """
-    e = F.col(existing) if isinstance(existing, str) else existing
-    m = F.col(mapped) if isinstance(mapped, str) else mapped
-    return F.coalesce(e, m, F.lit(default))
 
 
 def sort_delimited_cell(c: Column | str, sep: str = ";") -> Column:

@@ -29,14 +29,6 @@ def url_basename(url: Column | str) -> Column:
     return F.substring_index(_c(url), "/", -1)
 
 
-def url_dirname(url: Column | str) -> Column:
-    """F11 — everything before the basename, with trailing '/'.
-
-    Reference: active_location_URL derivation, src/s3_ccdi_to_sra.py:227-235.
-    """
-    return F.regexp_extract(_c(url), r"^(.*/)[^/]*$", 1)
-
-
 #: F12 — extension→file_type inference table
 #: (src/s3_validationry_refactored.py:1235-1338): .gz double-extension
 #: handling plus special cases; >6-char extensions fall back to txt.

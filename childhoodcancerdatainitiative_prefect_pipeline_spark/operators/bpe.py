@@ -90,7 +90,6 @@ def bpe_train(
     text_col: str = "text",
     n_merges: int = 50,
     max_words: int | None = 10000,
-    checkpoint_every: int = 10,
 ) -> list[Merge]:
     """Learn ``n_merges`` BPE merges from a corpus.
 
@@ -99,9 +98,8 @@ def bpe_train(
     rewritten row-locally each round.  Per round: one
     explode+groupBy shuffle over pair counts (map-side combinable,
     output ≤ |pairs|) and one driver ``first()`` for the argmax.
-    Lineage is cut with ``localCheckpoint`` every
-    ``checkpoint_every`` rounds so 50k-merge runs don't build a
-    50k-deep plan.  Ties break on (freq desc, pair lexicographic) so
+    Lineage is cut with ``localCheckpoint`` every 10 rounds so
+    50k-merge runs don't build a 50k-deep plan.  Ties break on (freq desc, pair lexicographic) so
     training is deterministic regardless of partitioning.
     """
     spark = corpus.sparkSession
@@ -156,7 +154,7 @@ def bpe_train(
             ).otherwise(F.concat(acc, F.array(s))),
         )
         nxt = syms.select(fold.alias("syms"), "freq").persist()
-        if (rank + 1) % checkpoint_every == 0:
+        if (rank + 1) % 10 == 0:
             nxt = nxt.localCheckpoint(eager=True)
         else:
             nxt.count()

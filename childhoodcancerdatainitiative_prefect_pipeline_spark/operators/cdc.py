@@ -69,13 +69,10 @@ def apply_changelog(
     key_cols: list[str],
     seq_col: str = "seq",
     op_col: str = "op",
-    broadcast_changes: bool = False,
 ) -> DataFrame:
     """snapshot + changelog → next snapshot (MERGE semantics)."""
     payload = [c for c in snapshot.columns if c not in key_cols]
     last = collapse_changelog(changes, key_cols, seq_col, op_col)
-    if broadcast_changes:
-        last = F.broadcast(last)
     renamed = last.select(
         *key_cols,
         F.col(op_col).alias("__op__"),

@@ -98,17 +98,6 @@ def minhash_signature(shingle_col: Column | str, num_hashes: int = 64) -> Column
     return F.array(*mins)
 
 
-def simhash64(token_col: Column | str) -> Column:
-    """64-bit SimHash of a token array, as a bigint.
-
-    Row-local fold: accumulate per-bit +1/−1 votes with
-    ``aggregate``+``zip_with`` over ``sequence(0,63)``, then pack the
-    sign bits.  No shuffle, no UDF.
-    """
-    toks = F.col(token_col) if isinstance(token_col, str) else token_col
-    return simhash64_from_hashes(F.transform(toks, lambda t: F.xxhash64(t)))
-
-
 def simhash_votes(hashes: Column | str) -> Column:
     """Per-bit SimHash votes as ONE fold over the token-hash array.
 
@@ -156,17 +145,6 @@ def pack_simhash_votes(votes: Column | str) -> Column:
     return packed
 
 
-def simhash64_from_hashes(hashes: Column | str) -> Column:
-    """SimHash of a *pre-staged* per-token hash array column.
-
-    Column-composition form; prefer staging :func:`simhash_votes` as a
-    bound column and packing with :func:`pack_simhash_votes` in a
-    second projection (as :func:`simhash_candidates` does) so the vote
-    fold is evaluated once per row.
-    """
-    return pack_simhash_votes(simhash_votes(hashes))
-
-
 def hamming64(a: Column, b: Column) -> Column:
     """Hamming distance between two 64-bit simhashes (popcount via bin())."""
     x = a.bitwiseXOR(b)
@@ -202,17 +180,6 @@ def exact_duplicates(
         )
         .filter(F.col("n_dups") > 1)
     )
-
-
-def dedup_exact_keep_first(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Drop exact duplicates, keeping the smallest id per content."""
-    from .aggregates import dedup_keep_last
-
-    keyed = df.withColumn("__ch__", F.xxhash64(F.col(text_col)))
-    kept = dedup_keep_last(keyed, ["__ch__"], [F.col(id_col).asc()])
-    return kept.drop("__ch__")
 
 
 # ---------------------------------------------------------------------------

@@ -34,14 +34,11 @@ def coalesce_conflicts(
     joined: DataFrame,
     left_suffix: str = "_x",
     right_suffix: str = "_y",
-    right_wins: Sequence[str] = (),
 ) -> DataFrame:
     """J2 — resolve post-join column collisions, parent wins.
 
-    Reference: src/s3_ccdi_to_cds.py:281-297 (``combine_first``; the
-    ``anatomic_site`` column reverses priority, :563-681).  Columns
-    named ``c_x``/``c_y`` collapse to ``c = coalesce(c_x, c_y)`` (or
-    reversed when ``c`` is listed in ``right_wins``).
+    Reference: src/s3_ccdi_to_cds.py:281-297 (``combine_first``).
+    Columns named ``c_x``/``c_y`` collapse to ``c = coalesce(c_x, c_y)``.
     """
     lefts = {c[: -len(left_suffix)]: c for c in joined.columns if c.endswith(left_suffix)}
     rights = {c[: -len(right_suffix)]: c for c in joined.columns if c.endswith(right_suffix)}
@@ -58,8 +55,7 @@ def coalesce_conflicts(
             continue
         lcol, rcol = lefts[base], rights[base]
         consumed.add(rcol)
-        first, second = (rcol, lcol) if base in right_wins else (lcol, rcol)
-        out_cols.append(F.coalesce(F.col(first), F.col(second)).alias(base))
+        out_cols.append(F.coalesce(F.col(lcol), F.col(rcol)).alias(base))
     return joined.select(*out_cols)
 
 
@@ -70,7 +66,6 @@ def lookup_join(
     from_col: str,
     to_col: str,
     out_col: str | None = None,
-    default_keep_original: bool = True,
 ) -> DataFrame:
     """J4 — broadcast lookup-table join with dict-get(default) semantics.
 
@@ -89,11 +84,7 @@ def lookup_join(
         ).dropDuplicates(["__from__"])
     )
     joined = df.join(m, df[on] == m["__from__"], "left")
-    mapped = (
-        F.coalesce(F.col("__to__"), F.col(on))
-        if default_keep_original
-        else F.col("__to__")
-    )
+    mapped = F.coalesce(F.col("__to__"), F.col(on))
     return joined.withColumn(out, mapped).drop("__from__", "__to__")
 
 
@@ -134,38 +125,6 @@ def semi_join(left: DataFrame, right: DataFrame, keys: Sequence[str]) -> DataFra
     Reference: src/s3_ccdi_to_dbgap.py:236-273.
     """
     return left.join(right, on=list(keys), how="left_semi")
-
-
-def multi_path_flatten(
-    base: DataFrame,
-    paths: Sequence[Sequence[tuple[DataFrame, str]]],
-    dedup_keys: Sequence[str] | None = None,
-) -> DataFrame:
-    """J3 — union of several join chains from the same base table.
-
-    Reference: src/s3_ccdi_to_cds.py:299-729 — 14+ named file→…→
-    {participant|study} join paths, concatenated then deduplicated.
-    Each path is a list of ``(table, key)`` hops applied as left
-    joins; results are combined with ``unionByName(allowMissing)``
-    and deduplicated.  At scale each hop is an equi-join Catalyst can
-    broadcast when the dimension side is small; the union is a no-
-    shuffle concatenation and the final dedup is the only extra
-    exchange.
-    """
-    outs: list[DataFrame] = []
-    for path in paths:
-        cur = base
-        for table, key in path:
-            cur = cur.join(table, on=key, how="left")
-        outs.append(cur)
-    result = outs[0]
-    for other in outs[1:]:
-        result = result.unionByName(other, allowMissingColumns=True)
-    if dedup_keys:
-        result = result.dropDuplicates(list(dedup_keys))
-    else:
-        result = result.dropDuplicates()
-    return result
 
 
 def iterative_resolve(

@@ -761,11 +761,6 @@ def pq_adc_topk(
     )
 
 
-def l2sq_micro_full(a: Column, b: Column) -> Column:
-    """Exact-int64 squared L2 over full vectors (re-rank metric)."""
-    return _l2sq_micro(a, b)
-
-
 def pq_rerank(
     shortlist: DataFrame,
     e: DataFrame,

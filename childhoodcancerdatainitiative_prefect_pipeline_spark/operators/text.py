@@ -79,10 +79,6 @@ def mean_word_length_of(toks: Column) -> Column:
     )
 
 
-def mean_word_length(text: Column | str) -> Column:
-    return mean_word_length_of(normalized_tokens(text))
-
-
 def quality_features(
     df: DataFrame,
     text_col: str = "text",

@@ -39,7 +39,7 @@ sorted/partitioned by link type).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -167,7 +167,6 @@ def _hop(
     cur_cols: list[str],
     key: str,
     reverse_cols: tuple[str, ...] = (),
-    broadcast_parent: bool = True,
 ) -> tuple[DataFrame, list[str]]:
     """One chain hop with the output schema computed in PYTHON.
 
@@ -198,8 +197,7 @@ def _hop(
             for c in cur_cols
         ]
     )
-    p = F.broadcast(parent) if broadcast_parent else parent
-    joined = p.join(renamed, on=key, how="inner")
+    joined = F.broadcast(parent).join(renamed, on=key, how="inner")
     joined_cols = (
         [key]
         + [c for c in parent_cols if c != key]
@@ -228,7 +226,6 @@ def join_hop(
     cur: DataFrame,
     key: str,
     reverse_cols: tuple[str, ...] = (),
-    broadcast_parent: bool = True,
 ) -> DataFrame:
     """One chain hop: parent ⨝ cur on ``key``, conflicts parent-wins.
 
@@ -239,13 +236,7 @@ def join_hop(
     for ``reverse_cols`` — the ``anatomic_site`` exception).
     """
     df, _ = _hop(
-        parent,
-        parent.columns,
-        cur,
-        cur.columns,
-        key,
-        reverse_cols=reverse_cols,
-        broadcast_parent=broadcast_parent,
+        parent, parent.columns, cur, cur.columns, key, reverse_cols=reverse_cols
     )
     return df
 
@@ -337,8 +328,6 @@ def cds_metadata(
     final_cols: list[str],
     required_cols: list[str],
     paths: tuple[CdsPath, ...] = CDS_PATHS,
-    persist_file: bool = True,
-    persist_nodes: bool = True,
 ) -> DataFrame:
     """The full CDS Metadata frame.
 
@@ -347,20 +336,16 @@ def cds_metadata(
     ``anatomic_site`` when ``sample_id`` is null (the reference's
     "minor fix"), fill required props with "Not Applicable", dedup.
 
-    ``persist_file`` materializes the file union once instead of
-    re-deriving it for each of the 14 paths — measured 23.8 s → 8.7 s
-    at sf0.1.  ``persist_nodes`` does the same for the five node
-    dimensions: each appears in up to 14 path subtrees, and while AQE
-    can reuse identical broadcast exchanges, a derived dimension
-    (e.g. ``participant_level``, itself a 5-table join) is otherwise
-    re-PLANNED 14× — at 100 TB that is 14 redundant dimension builds
-    per run (VERDICT r03 item 4).  Both materializations are EAGER
-    (``localCheckpoint``): a lazy persist races — the 14 path
-    branches of the single downstream job all start before the cache
-    populates and each re-derives the input.  Disable ``persist_file``
-    when the fact is a raw partitioned parquet scan whose per-path
-    link pushdown prunes to disjoint row groups — re-reading beats
-    caching 100 TB.
+    The file union is materialized once instead of re-derived for
+    each of the 14 paths — measured 23.8 s → 8.7 s at sf0.1.  The five
+    node dimensions are materialized too: each appears in up to 14
+    path subtrees, and while AQE can reuse identical broadcast
+    exchanges, a derived dimension (e.g. ``participant_level``, itself
+    a 5-table join) is otherwise re-PLANNED 14× — at 100 TB that is 14
+    redundant dimension builds per run (VERDICT r03 item 4).  Both
+    materializations are EAGER (``localCheckpoint``): a lazy persist
+    races — the 14 path branches of the single downstream job all
+    start before the cache populates and each re-derives the input.
     """
     # Pre-filter the PI rows INTO the level dimensions (r10): halves
     # the two checkpointed level dims (2 personnel rows/study → 1)
@@ -392,10 +377,8 @@ def cds_metadata(
     # (c) running the six checkpoint builds from a thread pool —
     # +20 CPU-s of contention, wall within weather.  The r10
     # sequential narrow shape stays.
-    if persist_file:
-        file_df = file_df.localCheckpoint()
-    if persist_nodes:
-        nodes = {k: v.localCheckpoint() for k, v in nodes.items()}
+    file_df = file_df.localCheckpoint()
+    nodes = {k: v.localCheckpoint() for k, v in nodes.items()}
     flat, union_cols = _flatten_paths(file_df, nodes, paths)
     flat = flat.filter(F.col("personnel_type") == "PI")
     # ONE projection for template columns + the anatomic_site "minor

@@ -9,9 +9,9 @@ Spark re-expression of the reference's ``ccdi_to_dcf_index`` flow
    if_guid_missing);
 2. mint one guid per distinct ``(md5sum, file_url)`` group where the
    guid is missing (src/utils.py:1395-1417) — the reference uses
-   ``uuid4``; this engine defaults to a deterministic md5-based mint
+   ``uuid4``; this engine mints a deterministic md5-based guid
    (:func:`..functions.ids.deterministic_guid_expr`) so re-runs are
-   idempotent, with the random mint available via ``deterministic=False``;
+   idempotent;
 3. union the sheets and drop duplicates (src/utils.py:1544-1551);
 4. stamp ``phs_accession`` and project the index column order
    ``guid, md5, size, acl, authz, urls, phs_accession``
@@ -36,28 +36,20 @@ DCF_INDEX_COLS = ["guid", "md5", "size", "acl", "authz", "urls", "phs_accession"
 _SHEET_COLS = ["acl", "authz", "dcf_indexd_guid", "md5sum", "file_url", "file_size"]
 
 
-def extract_dcf_sheet(sheet: DataFrame, deterministic: bool = True) -> DataFrame:
+def extract_dcf_sheet(sheet: DataFrame) -> DataFrame:
     """Per-sheet extraction + missing-guid mint (src/utils.py:1352-1456)."""
     df = sheet.select(*_SHEET_COLS)
-    mint = (
-        deterministic_guid_expr(
-            F.concat_ws("|", F.col("file_url"), F.col("md5sum"))
-        )
-        if deterministic
-        else None
+    mint = deterministic_guid_expr(
+        F.concat_ws("|", F.col("file_url"), F.col("md5sum"))
     )
     return mint_guids_per_group(
         df, ["md5sum", "file_url"], out_col="dcf_indexd_guid", mint=mint
     )
 
 
-def ccdi_to_dcf_index(
-    sheets: list[DataFrame],
-    phs_accession: str,
-    deterministic: bool = True,
-) -> DataFrame:
+def ccdi_to_dcf_index(sheets: list[DataFrame], phs_accession: str) -> DataFrame:
     """Union all file-node sheets into the DCF index manifest frame."""
-    parts = [extract_dcf_sheet(s, deterministic=deterministic) for s in sheets]
+    parts = [extract_dcf_sheet(s) for s in sheets]
     combined = parts[0]
     for p in parts[1:]:
         combined = combined.unionByName(p)

@@ -24,10 +24,6 @@ WORDS = (
 )
 
 
-def _rand(seed: int) -> Column:
-    return F.rand(seed)
-
-
 def gen_value(rule: PropertyRule, node: str, idx: Column, seed: int = 42) -> Column:
     """One property's generator expression, by declared type.
 

@@ -73,20 +73,6 @@ class NodeSchema:
         return None
 
 
-def _violation(df: DataFrame, node: str, rule: PropertyRule, rule_name: str,
-               severity: str, cond, key_col: str | None) -> DataFrame:
-    """Project a violation frame: (node, property, rule, severity, row_ref, value)."""
-    row_ref = F.col(key_col).cast("string") if key_col else F.lit(None).cast("string")
-    return df.filter(cond).select(
-        F.lit(node).alias("node"),
-        F.lit(rule.prop).alias("property"),
-        F.lit(rule_name).alias("rule"),
-        F.lit(severity).alias("severity"),
-        row_ref.alias("row_ref"),
-        F.col(rule.prop).cast("string").alias("value"),
-    )
-
-
 def validate(df: DataFrame, schema: NodeSchema) -> DataFrame:
     """ValidationRy — run every expression-rank rule in ONE pass.
 

@@ -142,7 +142,6 @@ def tabbreaker(
     study_id: str,
     keys: dict[str, str],
     surrogate: str = "uuid5",
-    prune_empty: bool = True,
     seed: str = "ccdi",
     multi_value: bool = False,
 ) -> dict[str, DataFrame]:
@@ -158,6 +157,4 @@ def tabbreaker(
         )
         for node, df in sheets.items()
     }
-    if not prune_empty:
-        return broken
     return {n: df for n, df in broken.items() if keep_sheet(df, n)}

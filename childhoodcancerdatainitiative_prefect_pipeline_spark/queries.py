@@ -8491,7 +8491,7 @@ def graph_pagerank_topk(spark, sf_dir):
     ).unionByName(pairs.select(F.col("s").alias("src"), F.col("c").alias("dst")))
     # distinct by construction: pairs is distinct and the two
     # directions are disjoint (src parity differs)
-    ranks = pagerank(edges, n_iter=5, assume_distinct=True)
+    ranks = pagerank(edges, n_iter=5)
     label = F.when(
         F.col("node") % 2 == 0,
         F.concat(F.lit("C"), F.shiftright("node", 1).cast("string")),

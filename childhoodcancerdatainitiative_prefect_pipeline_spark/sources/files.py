@@ -13,21 +13,15 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import NA_BANK
+from ..catalog import NA_BANK, normalize_na
 
 
-def read_tsv(
-    spark: SparkSession,
-    path: str,
-    schema=None,
-    string_typed: bool = True,
-    apply_na_bank: bool = True,
-) -> DataFrame:
+def read_tsv(spark: SparkSession, path: str, schema=None) -> DataFrame:
     """S3 — TSV scan with the reference's read conventions.
 
-    Mirrors ``read_csv(sep='\\t', dtype=str, na_values=...)``
-    (src/s3_catcherry.py:316-318): header on, everything string-typed
-    unless a schema is given, NA bank → null.
+    Mirrors the reference's pandas read (``sep='\\t', dtype=str,
+    na_values=...``, src/s3_catcherry.py:316-318): header on, everything
+    string-typed unless a schema is given, NA bank → null.
     """
     reader = (
         spark.read.option("sep", "\t")
@@ -36,45 +30,12 @@ def read_tsv(
     )
     if schema is not None:
         df = reader.schema(schema).csv(path)
-    elif string_typed:
-        df = reader.option("inferSchema", False).csv(path)
     else:
-        df = reader.option("inferSchema", True).csv(path)
-    if apply_na_bank:
-        from ..catalog import normalize_na
-
-        df = normalize_na(df)
-    return df
-
-
-def read_csv(
-    spark: SparkSession,
-    path: str,
-    schema=None,
-    string_typed: bool = True,
-    apply_na_bank: bool = True,
-) -> DataFrame:
-    """S3 — comma CSV variant (previous-submission reads)."""
-    reader = spark.read.option("header", True).option("nullValue", "")
-    if schema is not None:
-        df = reader.schema(schema).csv(path)
-    elif string_typed:
         df = reader.option("inferSchema", False).csv(path)
-    else:
-        df = reader.option("inferSchema", True).csv(path)
-    if apply_na_bank:
-        from ..catalog import normalize_na
-
-        df = normalize_na(df)
-    return df
+    return normalize_na(df)
 
 
-def write_tsv(
-    df: DataFrame,
-    path: str,
-    single_file: bool = False,
-    null_as_empty: bool = True,
-) -> None:
+def write_tsv(df: DataFrame, path: str, single_file: bool = False) -> None:
     """S4 — TSV sink.
 
     The reference writes one named TSV per node; ``single_file``
@@ -83,10 +44,14 @@ def write_tsv(
     NaN→"" on write mirrors src/s3_catcherry.py:1270-1276.
     """
     out = df.coalesce(1) if single_file else df
-    writer = out.write.mode("overwrite").option("sep", "\t").option("header", True)
-    if null_as_empty:
-        writer = writer.option("nullValue", "").option("emptyValue", "")
-    writer.csv(path)
+    (
+        out.write.mode("overwrite")
+        .option("sep", "\t")
+        .option("header", True)
+        .option("nullValue", "")
+        .option("emptyValue", "")
+        .csv(path)
+    )
 
 
 def write_node_tsvs(
@@ -177,7 +142,6 @@ def read_orc(spark: SparkSession, path: str) -> DataFrame:
 __all__ = [
     "NA_BANK",
     "read_tsv",
-    "read_csv",
     "write_tsv",
     "write_node_tsvs",
     "write_json_records",

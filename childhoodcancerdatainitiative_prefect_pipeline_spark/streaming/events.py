@@ -16,7 +16,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import DataStreamWriter
+
 
 from ..operators.aggregates import exact_sum
 
@@ -245,11 +245,6 @@ def idempotent_batch_writer(base_path: str):
         )
 
     return write_batch
-
-
-def start_console_sink(df: DataFrame, mode: str = "update") -> DataStreamWriter:
-    """Debug sink helper (not used by the engine's own tests)."""
-    return df.writeStream.outputMode(mode).format("console")
 
 
 def running_user_totals(events: DataFrame) -> DataFrame:

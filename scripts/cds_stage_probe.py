@@ -1,5 +1,6 @@
 #!/usr/bin/env python
-"""cds_flatten stage decomposition at the 10x replica (r11 item 1).
+"""cds_flatten stage decomposition at the 10x replica of
+$SPARK_GRAFT_SF_DIR (default sf0.1; r11 item 1).
 
 Runs the query with the noop sink, then dumps per-stage input records
 and executor CPU seconds from the REST API so the 14-arm union scan's
@@ -42,7 +43,7 @@ def _api(spark, path: str):
 def main() -> int:
     name = sys.argv[1] if len(sys.argv) > 1 else "cds_flatten"
     plan_out = sys.argv[2] if len(sys.argv) > 2 else None
-    src = "/root/testdata/sf0.1"
+    src = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     dest = os.path.join(_REPO, ".scratch", "sf1")
     spark = build_session(
         app_name=f"cds-probe-{name}",

@@ -5,6 +5,7 @@ the load stamp taken after the run."""
 
 from __future__ import annotations
 
+import __spark_entry__ as entrymod
 import bench
 from childhoodcancerdatainitiative_prefect_pipeline_spark.operators.dedup import (
     check_hot_buckets,
@@ -24,15 +25,22 @@ def test_run_query_times_each_run_and_releases_storage(spark, sf_dir):
 
 def test_run_query_drains_hot_bucket_observations(spark, sf_dir):
     """An action on an LSH entry completes its hot-bucket observation;
-    run_query drains it, so none stays queued for a later check."""
+    run_query drains it, and so does the driver contract's next
+    ``queries()`` call, so none stays queued for a later check."""
     quiet = {"emit": lambda m: None}
-    check_hot_buckets(**quiet)
-    REGISTRY["dedup_minhash_pairs"].fn(spark, sf_dir).write.format(
-        "noop"
-    ).mode("overwrite").save()
-    assert check_hot_buckets(clear=False, **quiet) != []
-    run_query(spark, "dedup_minhash_pairs", sf_dir, runs=1)
-    assert check_hot_buckets(clear=False, **quiet) == []
+    drainers = [
+        lambda: run_query(spark, "dedup_minhash_pairs", sf_dir, runs=1),
+        # a non-LSH entry: building it queues no observation of its own
+        lambda: entrymod.queries()["q1_pricing_summary"](spark, sf_dir),
+    ]
+    for drain in drainers:
+        check_hot_buckets(**quiet)
+        REGISTRY["dedup_minhash_pairs"].fn(spark, sf_dir).write.format(
+            "noop"
+        ).mode("overwrite").save()
+        assert check_hot_buckets(clear=False, **quiet) != []
+        drain()
+        assert check_hot_buckets(clear=False, **quiet) == []
 
 
 def test_bench_wait_for_quiet(monkeypatch):

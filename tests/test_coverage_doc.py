@@ -7,6 +7,7 @@ doc rot this test catches.
 
 from __future__ import annotations
 
+import ast
 import re
 from pathlib import Path
 
@@ -46,3 +47,38 @@ def test_documented_backticked_queries_exist():
     prefixes = ("dedup_", "sim_", "text_", "stream_", "corpus_")
     stale = [s for s in stale if s.startswith(prefixes)]
     assert not stale, f"COVERAGE.md references unknown queries: {stale}"
+
+
+def _top_level_names(path: Path) -> set[str]:
+    names: set[str] = set()
+    for node in ast.parse(path.read_text()).body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            names.add(node.name)
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            names.update(t.id for t in targets if isinstance(t, ast.Name))
+    return names
+
+
+def test_documented_code_references_resolve():
+    """Every backticked ``path.py`` names an existing file and every
+    ``path.py::name`` (``a/b`` lists several) a top-level definition in
+    it.  Paths resolve from the repo root, then the package; a bare
+    file name must match exactly one module of the package."""
+    repo = DOC.parent
+    pkg = repo / "childhoodcancerdatainitiative_prefect_pipeline_spark"
+    text = DOC.read_text()
+    refs = set(re.findall(r"`([\w./]+\.py)(?:::([\w/()]+))?`", text))
+    broken = []
+    for rel, names in sorted(refs):
+        hits = [p for p in (repo / rel, pkg / rel) if p.is_file()]
+        if not hits and "/" not in rel:
+            hits = list(pkg.rglob(rel))
+        if len(hits) != 1:
+            broken.append(f"{rel}: {len(hits)} files")
+            continue
+        defined = _top_level_names(hits[0])
+        for name in filter(None, names.replace("()", "").split("/")):
+            if name not in defined:
+                broken.append(f"{rel}::{name}")
+    assert refs and not broken, f"COVERAGE.md names missing code: {broken}"

@@ -2037,8 +2037,8 @@ def test_weighted_sample_matches_python_reference_and_tracks_weights(spark):
 
 def test_k_core_peels_to_the_dense_subgraph(spark):
     """K5 with pendant tails: the 3-core is exactly the K5; a tree
-    has no 2-core; matches a pure-Python peeling reference on a
-    hashed random graph."""
+    and a long path have no 2-core; matches a pure-Python peeling
+    reference on a hashed random graph."""
     from childhoodcancerdatainitiative_prefect_pipeline_spark.operators.graph import k_core
 
     k5 = [(a, b) for a in range(5) for b in range(5) if a < b]
@@ -2049,6 +2049,11 @@ def test_k_core_peels_to_the_dense_subgraph(spark):
 
     tree = spark.createDataFrame([(0, 1), (1, 2), (1, 3), (3, 4)], ["u", "w"])
     assert k_core(tree, 2).count() == 0
+
+    # a 70-node path peels one vertex off each end per round: its empty
+    # 2-core takes 35 rounds, past any small round cap
+    path = spark.createDataFrame([(i, i + 1) for i in range(69)], ["u", "w"])
+    assert k_core(path, 2).count() == 0
 
     # python peeling reference on a deterministic pseudo-random graph
     import hashlib
