@@ -99,8 +99,9 @@ def bpe_train(
     explode+groupBy shuffle over pair counts (map-side combinable,
     output ≤ |pairs|) and one driver ``first()`` for the argmax.
     Lineage is cut with ``localCheckpoint`` every 10 rounds so
-    50k-merge runs don't build a 50k-deep plan.  Ties break on (freq desc, pair lexicographic) so
-    training is deterministic regardless of partitioning.
+    50k-merge runs don't build a 50k-deep plan.  Ties break on (freq
+    desc, pair lexicographic) so training is deterministic regardless
+    of partitioning.
     """
     spark = corpus.sparkSession
     freqs = _word_freqs(corpus, text_col, max_words)

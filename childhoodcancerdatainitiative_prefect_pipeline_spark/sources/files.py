@@ -16,22 +16,20 @@ from pyspark.sql import functions as F
 from ..catalog import NA_BANK, normalize_na
 
 
-def read_tsv(spark: SparkSession, path: str, schema=None) -> DataFrame:
+def read_tsv(spark: SparkSession, path: str) -> DataFrame:
     """S3 — TSV scan with the reference's read conventions.
 
     Mirrors the reference's pandas read (``sep='\\t', dtype=str,
     na_values=...``, src/s3_catcherry.py:316-318): header on, everything
-    string-typed unless a schema is given, NA bank → null.
+    string-typed, NA bank → null.
     """
-    reader = (
+    df = (
         spark.read.option("sep", "\t")
         .option("header", True)
         .option("nullValue", "")
+        .option("inferSchema", False)
+        .csv(path)
     )
-    if schema is not None:
-        df = reader.schema(schema).csv(path)
-    else:
-        df = reader.option("inferSchema", False).csv(path)
     return normalize_na(df)
 
 

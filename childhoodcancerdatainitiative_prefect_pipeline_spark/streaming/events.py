@@ -17,7 +17,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
 from ..operators.aggregates import exact_sum
 
 
